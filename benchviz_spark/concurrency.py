@@ -38,10 +38,18 @@ DEFAULT_OVERLAP_CAP = 2
 
 
 def overlap_workers(n_subtrees: int) -> int:
-    """Effective pool width for ``n_subtrees`` independent subtrees."""
-    cap = int(
-        os.environ.get("SPARK_GRAFT_OVERLAP_WORKERS", "0") or 0
-    ) or DEFAULT_OVERLAP_CAP
+    """Effective pool width for ``n_subtrees`` independent subtrees.
+    Raises ``ValueError`` when ``SPARK_GRAFT_OVERLAP_WORKERS`` is set to
+    anything but a positive integer."""
+    raw = os.environ.get("SPARK_GRAFT_OVERLAP_WORKERS")
+    if raw is None:
+        cap = DEFAULT_OVERLAP_CAP
+    elif raw.strip().isdigit() and int(raw) > 0:
+        cap = int(raw)
+    else:
+        raise ValueError(
+            f"SPARK_GRAFT_OVERLAP_WORKERS={raw!r}: expected a positive integer"
+        )
     return max(1, min(n_subtrees, cap))
 
 

@@ -29,6 +29,8 @@ paid ONCE per session even with multiple consumers, via the
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
@@ -43,7 +45,7 @@ from benchviz_spark.operators.decontam import (
     decontam_eval_overlap,
     eval_split,
 )
-from benchviz_spark.operators.dedup import _JACCARD_ORACLE, _norm_text, jaccard_of
+from benchviz_spark.operators.dedup import _JACCARD_ORACLE, _norm_text
 from benchviz_spark.operators.sampling import (
     TRAIN_UPTO,
     VAL_UPTO,
@@ -1278,58 +1280,29 @@ def _admission_delta_oracle() -> str:
 
 
 def incremental_base_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The STANDING corpus of the incremental scenario: the curation
-    gates + exact dedup + split assignment applied to the epoch-0
-    sources only (``_INCR_SEEN_RE``, the same seen/incoming convention
-    ``dedup_incremental_new_docs`` established). This is what a prior
-    run already materialized on disk; ``curation_incremental_batch``
-    admits the next crawl against it."""
-    from benchviz_spark.operators.dedup import _INCR_SEEN_RE
-
-    gated = _incremental_gated(spark, sf_dir).filter(
-        F.col("source").rlike(_INCR_SEEN_RE)
-    )
-    rn = F.row_number().over(W.partitionBy("fp").orderBy("doc_id"))
-    deduped = gated.withColumn("rn", rn).filter(F.col("rn") == 1)
-    return _with_split(deduped).select(
-        "doc_id", "lang", "source", "n_chars", "split"
-    )
-
-
-def _incremental_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hygiene-gated documents (both epochs) with fingerprints — the
-    shared prefix of the base corpus and the batch admission. Identical
-    gates to ``_build_curated``; kept separate so the incremental
-    scenario never perturbs the full-corpus persist point."""
-    from benchviz_spark.sources.tables import spread
-
-    flagged = (
-        decontam_eval_overlap(spark, sf_dir)
-        .filter(F.col("contamination") >= THRESHOLD)
-        .select("doc_id")
-    )
-    # spread(): the md5(normalized text) fingerprint projection is the
-    # heavy per-row work here and would otherwise run on the one-split
-    # local scan as a single task (no-op on a many-split scan)
-    return (
-        spread(spark, load_table(spark, sf_dir, "documents"))
-        .filter(
-            (~eval_split(F.col("doc_id"))) & (F.col("n_chars") >= MIN_CHARS)
-        )
-        .join(flagged, "doc_id", "left_anti")
-        .withColumn("fp", F.md5(_norm_text(F.col("text"))))
-    )
+    """The STANDING corpus of the incremental scenario: the documents the
+    standing ``fps`` relation keeps (curation gates + exact dedup over
+    the epoch-0 sources, ``_standing_fps``), with the standard split
+    assignment. This is what a prior run already materialized on disk;
+    ``curation_incremental_batch`` admits the next crawl against it."""
+    docs = load_table(spark, sf_dir, "documents")
+    sh_all = _standing_token_pass(spark, docs)
+    fps = _standing_fps(docs, sh_all, _standing_eval_grams(sh_all))
+    return _with_split(docs.join(fps.select("doc_id"), "doc_id", "left_semi"))
 
 
 def _with_split(df: DataFrame) -> DataFrame:
+    """The admitted-row projection with the standard split assignment."""
     split = (
         F.when(F.col("bucket") < TRAIN_UPTO, "train")
         .when(F.col("bucket") < VAL_UPTO, "val")
         .otherwise("test")
     )
-    return df.withColumn(
-        "bucket", hash_bucket(F.col("doc_id"), "split:")
-    ).withColumn("split", split)
+    return (
+        df.withColumn("bucket", hash_bucket(F.col("doc_id"), "split:"))
+        .withColumn("split", split)
+        .select("doc_id", "lang", "source", "n_chars", "split")
+    )
 
 
 @query("curation_incremental_batch", oracle=_incremental_oracle())
@@ -1352,191 +1325,53 @@ def curation_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     full admission — gates, both dedup tiers, components, splits — is
     replayed cross-engine by ``_incremental_oracle``.
 
-    Scale design (the reason this exists, VERDICT r11 #7): every
-    corpus-sized structure here is the STANDING INDEX a production
-    lake materializes once — the curated corpus's fingerprint set
-    enters as the fixed ~8 KiB Bloom bitset (only bloom-positive batch
-    rows reach the exact anti join, so that shuffle is sized by the
-    batch dup rate), and the corpus band-posting table is the durable
-    LSH index an ingest equi-joins against (bucketed-on-(band, bucket)
-    parquet — no longer just a claim: ``build_admission_index`` below
-    materializes it and ``curation_incremental_batch_indexed`` consumes
-    it, fixed-batch corpus-x10 ingest ratio x1.01 vs this in-session
-    rebuild's x1.56, incremental_admission_10x.json). The
-    per-ingest moving state is batch-sized: batch bands, batch
-    shingle sets for verification, and a pair graph sized by the
-    batch's duplicate rate. The min-label loop iterates over
-    batch-batch edges only — never the standing corpus."""
-    from benchviz_spark.operators.dedup import (
-        _INCR_SEEN_RE,
-        band_buckets,
-        min_label_components,
-    )
-    from benchviz_spark.operators.relational_ext import (
-        bloom_bitmap,
-        bloom_might_contain,
-    )
-
-    # The gated lake feeds both epochs (standing + batch), and each
-    # later tier re-reads its slice several times — without the
-    # persists below, Catalyst expands every consumer into its own
-    # copy of the gate chain (the committed before-plan carried 302
-    # Exchange nodes for this query). Persist the five columns the
-    # tiers read (text never leaves the scan stage — guide §2.3);
-    # bench.py's per-row clear_caches() unpersists them all.
-    gated = _admit_scratch(
-        spark,
-        f"{sf_dir}|insess|gated",
-        _incremental_gated(spark, sf_dir).select(
-            "doc_id", "lang", "source", "n_chars", "fp"
-        ),
-    )
-    old_gated = gated.filter(F.col("source").rlike(_INCR_SEEN_RE))
-    rn = F.row_number().over(W.partitionBy("fp").orderBy("doc_id"))
-    old_curated = _admit_scratch(
-        spark,
-        f"{sf_dir}|insess|old_curated",
-        old_gated.withColumn("rn", rn)
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "fp"),
-    )
-    batch = gated.filter(~F.col("source").rlike(_INCR_SEEN_RE))
-
-    # (2) exact tier: bloom-gated anti join against standing fps, then
-    # lowest-id-wins within the batch
-    bitmap = bloom_bitmap(
-        old_curated.select(F.xxhash64("fp").alias("pk")), "pk"
-    )
-    probed = batch.crossJoin(F.broadcast(bitmap)).withColumn(
-        "maybe_seen", bloom_might_contain(F.xxhash64("fp"))
-    )
-    old_fps = old_curated.select("fp")
-    new_vs_old = probed.filter(~F.col("maybe_seen")).unionByName(
-        probed.filter(F.col("maybe_seen")).join(old_fps, "fp", "left_anti")
-    )
-    b2 = _admit_scratch(
-        spark,
-        f"{sf_dir}|insess|b2",
-        new_vs_old.withColumn("rn", rn)
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "lang", "source", "n_chars"),
-    )
-
-    # (3) near-dup tier vs the standing corpus: band collisions
-    # verified by exact shingle Jaccard, batch loser dropped. ONE
-    # lake-wide n=3 shingle pass (spread, persisted) feeds BOTH the
-    # band postings and the verification shingle store below — r15:
-    # band_buckets and hashed_shingled_documents each re-ran the
-    # normalize+split+shingle chain over the same documents.
-    from benchviz_spark.operators.dedup import shingled_documents
-    from benchviz_spark.sources.tables import spread
-
-    sh3 = _admit_scratch(
-        spark,
-        f"{sf_dir}|insess|sh3",
-        spread(spark, shingled_documents(spark, sf_dir)),
-    )
-    bands = _admit_scratch(
-        spark, f"{sf_dir}|insess|bands", band_buckets(spark, sf_dir, sh=sh3)
-    )
-    new_b = bands.join(b2.select("doc_id"), "doc_id", "left_semi")
-    old_b = bands.join(old_curated.select("doc_id"), "doc_id", "left_semi")
-    cand_old = (
-        new_b.select(F.col("doc_id").alias("new_id"), "band", "bucket")
-        .join(
-            old_b.select(F.col("doc_id").alias("old_id"), "band", "bucket"),
-            ["band", "bucket"],
-        )
-        .select("new_id", "old_id")
-        .distinct()
-    )
-    # four consumers below (both vs-standing sides + both within-batch
-    # sides): the hashed form is projected once from the persisted
-    # shingle pass above (identical expressions to
-    # hashed_shingled_documents) and persisted itself
-    sh = _admit_scratch(
-        spark,
-        f"{sf_dir}|insess|sh",
-        sh3.select(
-            "doc_id",
-            F.array_distinct(
-                F.transform(F.col("shingles"), lambda s: F.xxhash64(s))
-            ).alias("hs"),
-        ),
-    )
-    left = sh.select(F.col("doc_id").alias("new_id"), F.col("hs").alias("sa"))
-    right = sh.select(F.col("doc_id").alias("old_id"), F.col("hs").alias("sb"))
-    jac = jaccard_of("sa", "sb")
-    drop_vs_old = (
-        cand_old.join(left, "new_id")
-        .join(right, "old_id")
-        .filter(jac >= 0.5)
-        .select(F.col("new_id").alias("doc_id"))
-        .distinct()
-    )
-    b3 = _admit_scratch(
-        spark, f"{sf_dir}|insess|b3", b2.join(drop_vs_old, "doc_id", "left_anti")
-    )
-
-    # (4) within-batch near-dups: verified pair graph -> components,
-    # cluster minimum survives
-    b3_b = bands.join(b3.select("doc_id"), "doc_id", "left_semi")
-    cand_nn = (
-        b3_b.select(F.col("doc_id").alias("left_id"), "band", "bucket")
-        .join(
-            b3_b.select(F.col("doc_id").alias("right_id"), "band", "bucket"),
-            ["band", "bucket"],
-        )
-        .filter(F.col("left_id") < F.col("right_id"))
-        .select("left_id", "right_id")
-        .distinct()
-    )
-    lshj = sh.select(F.col("doc_id").alias("left_id"), F.col("hs").alias("sa"))
-    rshj = sh.select(F.col("doc_id").alias("right_id"), F.col("hs").alias("sb"))
-    pairs_nn = (
-        cand_nn.join(lshj, "left_id")
-        .join(rshj, "right_id")
-        .filter(jac >= 0.5)
-        .select("left_id", "right_id")
-    )
-    comp = min_label_components(spark, pairs_nn, b3.select("doc_id"))
-    minima = comp.filter(F.col("doc_id") == F.col("cluster_id")).select("doc_id")
-    delta = b3.join(minima, "doc_id", "left_semi")
-    return _with_split(delta).select(
-        "doc_id", "lang", "source", "n_chars", "split"
-    )
+    This is the in-session form of the ONE admission path: the five
+    standing relations are built in memory (``standing_in_memory``,
+    the same definitions ``build_admission_index`` writes to the
+    catalog) and the batch is admitted against them by the same tier
+    function ``incremental_batch_indexed`` runs over the durable
+    index. Nothing touches the catalog, and every relation is scratch
+    persisted, so bench.py's per-row clear_caches() drops it all."""
+    standing = standing_in_memory(spark, sf_dir)
+    return _admit_incremental(spark, sf_dir, standing, f"{sf_dir}|in-memory")
 
 
 # ---------------------------------------------------------------------------
-# Durable standing-corpus admission index (VERDICT r13 #2). The
-# in-session ``curation_incremental_batch`` rebuilds every
-# corpus-sized structure per ingest — measured as the x1.61 residual
-# of the fixed-batch 10x probe (incremental_admission_10x.json). This
-# is the index a production lake materializes ONCE per standing-corpus
-# epoch, after which every ingest's cost is sized by the batch alone:
+# The standing corpus as a value (VERDICT r13 #2). Admission probes FIVE
+# standing relations, defined once below (``_standing_relations``) and
+# held in one of two forms:
 #
-#   {prefix}_eval_grams  distinct eval-split n-grams (decontam's
-#                        standing asset; broadcast side of the batch
-#                        contamination join)
-#   {prefix}_fps         standing curated (doc_id, fp), bucketed by fp
-#                        (exact-tier anti-join side: only the bloom-
-#                        positive batch rows shuffle, the corpus side
-#                        is read co-located)
-#   {prefix}_bands       standing curated (doc_id, band, bucket),
-#                        bucketed by (band, bucket) (LSH posting list:
-#                        the batch's bands shuffle to it, the corpus
-#                        postings never move)
-#   {prefix}_shingles    standing curated (doc_id, hs), bucketed by
-#                        doc_id (exact-Jaccard verification side, read
-#                        only for band-colliding old_ids)
-#   {prefix}_bloom       the ~8 KiB bloom bitset over standing fps,
-#                        one row, broadcast per ingest
+# - durable: ``build_admission_index`` writes them as bucketed catalog
+#   tables once per standing-corpus epoch, after which every ingest's
+#   cost is sized by the batch alone (``admission_tables`` reads them);
+# - in memory: ``standing_in_memory`` persists the same relations as
+#   query scratch, for the in-session ``curation_incremental_batch``.
+#
+#   eval_grams  distinct eval-split n-grams (decontam's standing asset;
+#               broadcast side of the batch contamination join)
+#   fps         standing curated (doc_id, fp), bucketed by fp
+#               (exact-tier anti-join side: only the bloom-positive
+#               batch rows shuffle, the corpus side is read co-located)
+#   bands       standing curated (doc_id, band, bucket), bucketed by
+#               (band, bucket) (LSH posting list: the batch's bands
+#               shuffle to it, the corpus postings never move)
+#   shingles    standing curated (doc_id, hs), bucketed by doc_id
+#               (exact-Jaccard verification side, read only for
+#               band-colliding old_ids)
+#   bloom       the ~8 KiB bloom bitset over standing fps, one row,
+#               broadcast per ingest
 #
 # Bucketing follows serving/lake.py's proven saveAsTable pattern
 # (Spark honors bucket metadata only through the catalog).
 # ---------------------------------------------------------------------------
 
 _ADMISSION_PARTS = ("eval_grams", "fps", "bands", "shingles", "bloom")
+# bucket columns of the durable form (eval_grams and bloom are broadcast)
+_ADMISSION_BUCKETS = {
+    "fps": ("fp",),
+    "bands": ("band", "bucket"),
+    "shingles": ("doc_id",),
+}
 
 # (applicationId, prefix) -> {"sf_dir": ..., "names": ...}: the epoch
 # index is a deterministic function of (sf_dir, prefix), so a session's
@@ -1556,7 +1391,9 @@ _INDEX_MEMO: dict = register_cache({})
 # batch documents scan 20x in one query). All are BATCH-sized (the
 # docstrings' scale argument), persisted MEMORY_AND_DISK inside the
 # timed query, and enrolled here so bench.py's per-row clear_caches()
-# unpersists them — nothing survives into the next timed row.
+# unpersists them — nothing survives into the next timed row. The
+# in-memory standing relations (local checkpoints, see
+# ``standing_in_memory``) are enrolled here too.
 _ADMIT_SCRATCH: dict = register_cache({})
 
 
@@ -1570,243 +1407,64 @@ def admission_index_names(prefix: str = "admission") -> dict[str, str]:
     return {part: f"{prefix}_{part}" for part in _ADMISSION_PARTS}
 
 
-def build_admission_index(
-    spark: SparkSession,
-    sf_dir: str,
-    prefix: str = "admission",
-    n_buckets: int = 8,
-) -> dict[str, str]:
-    """Materialize the standing-corpus admission index (one-time cost,
-    amortized over every subsequent ingest). ``n_buckets`` sizes the
-    bucketed tables; at 100 TB it tracks the cluster's target
-    partition count (thousands), here it matches the test fleet.
+def admission_tables(
+    spark: SparkSession, prefix: str = "admission"
+) -> dict[str, DataFrame]:
+    """The durable standing relations, read from the catalog."""
+    return {
+        part: spark.table(name)
+        for part, name in admission_index_names(prefix).items()
+    }
 
-    r16 build shape (guide §2.6 / §1.2): ONE spread+persisted tokenize
-    pass computes both shingle widths for every table, and the five
-    writes are submitted dependency-ordered from a small thread pool —
-    eval_grams ∥ fps first, then bands ∥ shingles ∥ bloom the moment
-    fps lands (overlapping the eval_grams tail; no wait-all barriers,
-    no second tokenize pass, no count() between phases). Expressions
-    are identical per width, so every table is byte-for-byte what the
-    serial build wrote."""
-    import shutil
-    from urllib.parse import urlparse
 
-    from benchviz_spark.concurrency import subtree_pool
-
-    from benchviz_spark.operators.dedup import (
-        _INCR_SEEN_RE,
-        band_buckets,
-    )
-    from benchviz_spark.operators.relational_ext import bloom_bitmap
+def _standing_token_pass(spark: SparkSession, docs: DataFrame) -> DataFrame:
+    """(doc_id, s4, s3) over the standing ∪ eval-carve documents: ONE
+    spread tokenize pass computing both shingle widths feeds every
+    standing relation (r16, guide §1.2 "fewer passes"). The n=NGRAM and
+    n=3 expressions are the per-width ``_shingles`` trees verbatim over
+    one token split, so every consumer sees byte-identical arrays.
+    Scoring incoming-source docs is unnecessary: contamination is a
+    per-document aggregate, so the flags of the standing docs do not
+    depend on which other docs are scored alongside them."""
+    from benchviz_spark.operators.dedup import _INCR_SEEN_RE, _shingles
     from benchviz_spark.sources.tables import spread
-
-    names = admission_index_names(prefix)
-    memo_key = (spark.sparkContext.applicationId, prefix)
-    hit = _INDEX_MEMO.get(memo_key)
-    if hit is not None and hit["sf_dir"] == sf_dir:
-        return hit["names"]
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    for name in names.values():
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        shutil.rmtree(f"{warehouse}/{name}", ignore_errors=True)
-
-    docs = load_table(spark, sf_dir, "documents")
-
-    # ONE spread+persisted tokenize pass over (standing ∪ eval-carve)
-    # documents computing BOTH shingle widths feeds EVERY index table
-    # (r16, guide §1.2 "fewer passes"; extends r15's shingle-once: the
-    # r15 build still tokenized the lake twice — once at n=NGRAM for
-    # the eval/fps phase, once at n=3 for the bands/shingles phase
-    # behind a count() barrier). The n=4 and n=3 shingle expressions
-    # are the per-width `_shingles` trees verbatim over one token
-    # split, so every consumer sees byte-identical arrays; the posting
-    # side is pre-filtered to standing sources exactly as before
-    # (contamination is a per-document aggregate, so flags for the
-    # docs fps actually gates are identical whether or not
-    # incoming-source docs are scored alongside them).
-    from benchviz_spark.operators.dedup import _norm_text, _shingles
 
     pre = docs.filter(
         F.col("source").rlike(_INCR_SEEN_RE) | eval_split(F.col("doc_id"))
     )
     toks = F.split(_norm_text(F.col("text")), " ")
-    sh_all = spread(
+    return spread(
         spark,
         pre.select(
             "doc_id",
             _shingles(toks, NGRAM).alias("s4"),
             _shingles(toks, 3).alias("s3"),
         ),
-    ).persist()
-    sh_all.count()
-    ev = (
+    )
+
+
+def _standing_eval_grams(sh_all: DataFrame) -> DataFrame:
+    """The eval suite's distinct n-grams. The suite is a fixed lake-wide
+    carve (eval_split over doc_id), independent of which sources have
+    been ingested, so its gram set is standing state."""
+    return (
         sh_all.filter(eval_split(F.col("doc_id")))
         .filter(F.size("s4") > 0)
         .select(F.explode("s4").alias("g"))
         .distinct()
     )
 
-    def build_eval_grams() -> None:
-        # Decontam's standing asset: the eval suite is a fixed
-        # lake-wide carve (eval_split over doc_id), independent of
-        # which sources have been ingested, so its gram set is
-        # index-time state.
-        spark.sparkContext.setJobDescription(
-            f"admission index: {names['eval_grams']}"
-        )
-        ev.write.mode("overwrite").saveAsTable(names["eval_grams"])
 
-    def build_fps() -> None:
-        # Standing curated survivors: identical gates + exact dedup to
-        # incremental_base_corpus (lowest doc_id per fingerprint wins;
-        # the contamination flags replay _incremental_gated's exactly —
-        # same eval gram set, same per-doc aggregate, same THRESHOLD —
-        # over the persisted shingle pass, pinned by the shared golden
-        # oracle and test_curation's indexed/in-session equivalence).
-        spark.sparkContext.setJobDescription(f"admission index: {names['fps']}")
-        flagged = (
-            sh_all.filter(~eval_split(F.col("doc_id")))
-            .filter(F.size("s4") > 0)
-            .select(
-                "doc_id",
-                F.size("s4").cast("long").alias("n_shingles"),
-                F.explode("s4").alias("g"),
-            )
-            .join(F.broadcast(ev), "g")
-            .groupBy("doc_id", "n_shingles")
-            .agg(F.count("*").alias("n_contaminated"))
-            .filter(
-                F.round(F.col("n_contaminated") / F.col("n_shingles"), 6)
-                >= THRESHOLD
-            )
-            .select("doc_id")
-        )
-        standing_gated = (
-            docs.filter(
-                F.col("source").rlike(_INCR_SEEN_RE)
-                & (~eval_split(F.col("doc_id")))
-                & (F.col("n_chars") >= MIN_CHARS)
-            )
-            .join(flagged, "doc_id", "left_anti")
-            .withColumn("fp", F.md5(_norm_text(F.col("text"))))
-        )
-        rn = F.row_number().over(W.partitionBy("fp").orderBy("doc_id"))
-        curated = (
-            standing_gated.withColumn("rn", rn)
-            .filter(F.col("rn") == 1)
-            .select("doc_id", "fp")
-        )
-        curated.write.mode("overwrite").bucketBy(n_buckets, "fp").saveAsTable(
-            names["fps"]
-        )
-
-    def build_bands(sh3: DataFrame) -> None:
-        spark.sparkContext.setJobDescription(f"admission index: {names['bands']}")
-        band_buckets(spark, sf_dir, sh=sh3).write.mode("overwrite").bucketBy(
-            n_buckets, "band", "bucket"
-        ).saveAsTable(names["bands"])
-
-    def build_shingles(sh3: DataFrame) -> None:
-        # hashed_shingled_documents' exact projection, over the shared
-        # shingle pass
-        spark.sparkContext.setJobDescription(
-            f"admission index: {names['shingles']}"
-        )
-        sh3.select(
-            "doc_id",
-            F.array_distinct(
-                F.transform(F.col("shingles"), lambda s: F.xxhash64(s))
-            ).alias("hs"),
-        ).write.mode("overwrite").bucketBy(n_buckets, "doc_id").saveAsTable(
-            names["shingles"]
-        )
-
-    def build_bloom() -> None:
-        spark.sparkContext.setJobDescription(f"admission index: {names['bloom']}")
-        bloom_bitmap(
-            spark.table(names["fps"]).select(F.xxhash64("fp").alias("pk")), "pk"
-        ).write.mode("overwrite").saveAsTable(names["bloom"])
-
-    # Dependency-ordered submissions instead of the r15 two-phase
-    # barriers ([ev ∥ fps] wait-all, sh3 count, [bands ∥ shingles ∥
-    # bloom] wait-all): the bands/shingles/bloom writes depend only on
-    # fps, so they start the moment fps lands — overlapping with the
-    # eval_grams tail — and the second tokenize pass + its count()
-    # barrier are gone entirely (bands/shingles read the combined pass
-    # semi-joined to the survivors).
-    with subtree_pool(3) as pool:
-        f_ev = pool.submit(build_eval_grams)
-        f_fps = pool.submit(build_fps)
-        f_fps.result()
-        curated_ids = spark.table(names["fps"]).select("doc_id")
-        sh3 = sh_all.join(curated_ids, "doc_id", "left_semi").select(
-            "doc_id", F.col("s3").alias("shingles")
-        )
-        for fut in [
-            pool.submit(build_bands, sh3),
-            pool.submit(build_shingles, sh3),
-            pool.submit(build_bloom),
-            f_ev,
-        ]:
-            fut.result()
-    sh_all.unpersist()
-    spark.sparkContext.setJobDescription(None)
-    memo_put(_INDEX_MEMO, memo_key, {"sf_dir": sf_dir, "names": names})
-    return names
-
-
-def _indexed_admit_vs_standing(
-    spark: SparkSession,
-    sf_dir: str,
-    prefix: str = "admission",
-    within_batch_rn: bool = True,
-    docs: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Steps (1)-(3) of index-mediated admission — hygiene gates, exact
-    tier vs the standing fingerprints, near-dup tier vs the standing
-    band postings — shared by the full incremental consume and the
-    per-document admission delta. Returns (b3, bands_batch, sh_batch)
-    so the full path can run its within-batch step (4) on the same
-    batch-sized relations. ``within_batch_rn=False`` skips the
-    lowest-doc_id-wins exact dedup WITHIN the batch: the per-document
-    decision the streaming gate mirrors. ``docs`` overrides the table
-    scan with an already-materialized documents relation — the
-    foreachBatch admission sink hands each MICRO-BATCH through here,
-    so one decision function serves batch, drain, and production
-    stream."""
-    from benchviz_spark.operators.dedup import (
-        _INCR_SEEN_RE,
-        band_buckets,
-        shingled_documents,
-    )
-    from benchviz_spark.operators.relational_ext import bloom_might_contain
-
-    from benchviz_spark.sources.tables import spread
-
-    names = admission_index_names(prefix)
-    if docs is None:
-        docs = load_table(spark, sf_dir, "documents")
-    # spread() the batch once for every probe-side chain below: the
-    # gate shingles, the band buckets and the hashed shingle store all
-    # run heavy per-row work directly on this relation, and a one-split
-    # local scan would serialize each of them onto a single task (the
-    # build side already spreads its sh3 pass for the same reason).
-    # No-op on a many-split production micro-batch.
-    batch_docs = spread(
-        spark, docs.filter(~F.col("source").rlike(_INCR_SEEN_RE))
-    )
-
-    # (1) hygiene gates, batch-sized: eval carve + length are scan
-    # filters; contamination joins the batch's grams against the
-    # broadcast standing eval-gram set (same rounding as
-    # decontam_eval_overlap so the flag boundary is bit-identical).
-    ev = spark.table(names["eval_grams"])
-    sh4 = shingled_documents(spark, sf_dir, n=NGRAM, docs=batch_docs).filter(
-        F.size("shingles") > 0
-    )
+def _hygiene_gated(docs: DataFrame, sh4: DataFrame, ev: DataFrame) -> DataFrame:
+    """``docs`` passing the curation hygiene gates — eval carve, length,
+    contamination of their (doc_id, shingles) n-grams ``sh4`` against
+    the broadcast eval-gram set ``ev`` (same rounding as
+    decontam_eval_overlap, so the flag boundary is bit-identical) —
+    with their text fingerprint. One gate definition for the standing
+    corpus and every batch."""
     flagged = (
-        sh4.select(
+        sh4.filter(F.size("shingles") > 0)
+        .select(
             "doc_id",
             F.size("shingles").cast("long").alias("n_shingles"),
             F.explode("shingles").alias("g"),
@@ -1820,32 +1478,212 @@ def _indexed_admit_vs_standing(
         )
         .select("doc_id")
     )
-    batch = (
-        batch_docs.filter(
+    return (
+        docs.filter(
             (~eval_split(F.col("doc_id"))) & (F.col("n_chars") >= MIN_CHARS)
         )
         .join(flagged, "doc_id", "left_anti")
         .withColumn("fp", F.md5(_norm_text(F.col("text"))))
     )
+
+
+def _standing_fps(
+    docs: DataFrame, sh_all: DataFrame, ev: DataFrame
+) -> DataFrame:
+    """Standing curated survivors (doc_id, fp): the hygiene gates over
+    the epoch-0 sources, then exact dedup with the lowest doc_id per
+    fingerprint winning."""
+    from benchviz_spark.operators.dedup import _INCR_SEEN_RE
+
+    sh4 = sh_all.filter(~eval_split(F.col("doc_id"))).select(
+        "doc_id", F.col("s4").alias("shingles")
+    )
+    gated = _hygiene_gated(
+        docs.filter(F.col("source").rlike(_INCR_SEEN_RE)), sh4, ev
+    )
+    rn = F.row_number().over(W.partitionBy("fp").orderBy("doc_id"))
+    return (
+        gated.withColumn("rn", rn)
+        .filter(F.col("rn") == 1)
+        .select("doc_id", "fp")
+    )
+
+
+def _standing_relations(
+    spark: SparkSession,
+    sf_dir: str,
+    store: Callable[[str, DataFrame], DataFrame],
+) -> dict[str, DataFrame]:
+    """Define the five standing relations and hand each to
+    ``store(part, df)``, which materializes it (a catalog write or a
+    scratch persist) and returns the relation to read it back from.
+
+    r16 build shape (guide §2.6 / §1.2): ONE persisted tokenize pass
+    (``_standing_token_pass``) feeds every relation, and the five
+    stores are submitted dependency-ordered from a small thread pool —
+    eval_grams ∥ fps first, then bands ∥ shingles ∥ bloom the moment
+    fps lands (overlapping the eval_grams tail; no wait-all barriers,
+    no second tokenize pass, no count() between phases)."""
+    from benchviz_spark.concurrency import subtree_pool
+    from benchviz_spark.operators.dedup import band_buckets, hash_shingles
+    from benchviz_spark.operators.relational_ext import bloom_bitmap
+
+    docs = load_table(spark, sf_dir, "documents")
+    sh_all = _standing_token_pass(spark, docs).persist()
+    sh_all.count()
+    ev = _standing_eval_grams(sh_all)
+    with subtree_pool(3) as pool:
+        f_ev = pool.submit(store, "eval_grams", ev)
+        fps = pool.submit(
+            lambda: store("fps", _standing_fps(docs, sh_all, ev))
+        ).result()
+        # bands/shingles read the shared pass semi-joined to the
+        # survivors, so they start the moment fps lands
+        sh3 = sh_all.join(fps.select("doc_id"), "doc_id", "left_semi").select(
+            "doc_id", F.col("s3").alias("shingles")
+        )
+        futs = {
+            "bands": pool.submit(
+                lambda: store("bands", band_buckets(spark, sf_dir, sh=sh3))
+            ),
+            "shingles": pool.submit(lambda: store("shingles", hash_shingles(sh3))),
+            "bloom": pool.submit(
+                lambda: store(
+                    "bloom",
+                    bloom_bitmap(fps.select(F.xxhash64("fp").alias("pk")), "pk"),
+                )
+            ),
+            "eval_grams": f_ev,
+        }
+        out = {"fps": fps, **{part: f.result() for part, f in futs.items()}}
+    sh_all.unpersist()
+    spark.sparkContext.setJobDescription(None)
+    return out
+
+
+def standing_in_memory(
+    spark: SparkSession, sf_dir: str
+) -> dict[str, DataFrame]:
+    """The standing relations held in memory (nothing is written to the
+    catalog), each enrolled in the admission scratch so clear_caches()
+    drops it. Eager local checkpoints, not persists: a persisted
+    relation carries its whole definition into every downstream plan,
+    and the within-batch component loop re-plans those plans on every
+    iteration (measured ~5 s of a ~22 s sf0.1 run on 4 cores); a
+    checkpoint enters each plan as one RDD scan."""
+
+    def store(part: str, df: DataFrame) -> DataFrame:
+        spark.sparkContext.setJobDescription(f"admission standing: {part}")
+        key = (spark.sparkContext.applicationId, f"{sf_dir}|in-memory|{part}")
+        return memo_put(_ADMIT_SCRATCH, key, df.localCheckpoint(eager=True))
+
+    return _standing_relations(spark, sf_dir, store)
+
+
+def build_admission_index(
+    spark: SparkSession,
+    sf_dir: str,
+    prefix: str = "admission",
+    n_buckets: int = 8,
+) -> dict[str, str]:
+    """Materialize the standing-corpus admission index (one-time cost,
+    amortized over every subsequent ingest) as the catalog tables
+    ``admission_index_names(prefix)``. ``n_buckets`` sizes the
+    bucketed tables; at 100 TB it tracks the cluster's target
+    partition count (thousands), here it matches the test fleet."""
+    import shutil
+    from urllib.parse import urlparse
+
+    names = admission_index_names(prefix)
+    memo_key = (spark.sparkContext.applicationId, prefix)
+    hit = _INDEX_MEMO.get(memo_key)
+    if hit is not None and hit["sf_dir"] == sf_dir:
+        return hit["names"]
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    for name in names.values():
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        shutil.rmtree(f"{warehouse}/{name}", ignore_errors=True)
+
+    def store(part: str, df: DataFrame) -> DataFrame:
+        spark.sparkContext.setJobDescription(f"admission index: {names[part]}")
+        writer = df.write.mode("overwrite")
+        if part in _ADMISSION_BUCKETS:
+            writer = writer.bucketBy(n_buckets, *_ADMISSION_BUCKETS[part])
+        writer.saveAsTable(names[part])
+        return spark.table(names[part])
+
+    _standing_relations(spark, sf_dir, store)
+    memo_put(_INDEX_MEMO, memo_key, {"sf_dir": sf_dir, "names": names})
+    return names
+
+
+def _indexed_admit_vs_standing(
+    spark: SparkSession,
+    sf_dir: str,
+    standing: dict[str, DataFrame],
+    tag: str,
+    within_batch_rn: bool = True,
+    docs: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Steps (1)-(3) of admission against the ``standing`` relations
+    (durable tables or in memory) — hygiene gates, exact tier vs the
+    standing fingerprints, near-dup tier vs the standing band postings
+    — shared by the full incremental admission and the per-document
+    admission delta. Returns (b3, bands_batch, sh_batch) so the full
+    path can run its within-batch step (4) on the same batch-sized
+    relations. ``tag`` names this standing source in the scratch keys.
+    ``within_batch_rn=False`` skips the lowest-doc_id-wins exact dedup
+    WITHIN the batch: the per-document decision the streaming gate
+    mirrors. ``docs`` overrides the table scan with an already-
+    materialized documents relation — the foreachBatch admission sink
+    hands each MICRO-BATCH through here, so one decision function
+    serves batch, drain, and production stream."""
+    from benchviz_spark.operators.dedup import (
+        _INCR_SEEN_RE,
+        band_buckets,
+        hash_shingles,
+        shingled_documents,
+        verified_band_pairs,
+    )
+    from benchviz_spark.operators.relational_ext import bloom_might_contain
+
+    from benchviz_spark.sources.tables import spread
+
+    if docs is None:
+        docs = load_table(spark, sf_dir, "documents")
+    # spread() the batch once for every probe-side chain below: the
+    # gate shingles, the band buckets and the hashed shingle store all
+    # run heavy per-row work directly on this relation, and a one-split
+    # local scan would serialize each of them onto a single task (the
+    # standing side spreads its token pass for the same reason).
+    # No-op on a many-split production micro-batch.
+    batch_docs = spread(
+        spark, docs.filter(~F.col("source").rlike(_INCR_SEEN_RE))
+    )
+
+    # (1) hygiene gates, batch-sized: the batch's grams join the
+    # broadcast standing eval-gram set.
+    sh4 = shingled_documents(spark, sf_dir, n=NGRAM, docs=batch_docs)
+    batch = _hygiene_gated(batch_docs, sh4, standing["eval_grams"])
     # The gated batch feeds both bloom-probe arms (and through them
     # every later tier): project to the five columns the tiers read
     # (guide §2.3 — text never crosses another exchange) and persist,
     # so the gate chain executes once per query instead of once per
     # consumer copy.
-    tag = f"{sf_dir}|{prefix}|{within_batch_rn}|{docs is not None}"
+    tag = f"{tag}|{within_batch_rn}|{docs is not None}"
     batch = _admit_scratch(
         spark, f"{tag}|batch",
         batch.select("doc_id", "lang", "source", "n_chars", "fp"),
     )
 
-    # (2) exact tier: broadcast the PERSISTED bloom bitset; only
-    # bloom-positive rows reach the anti join against the fp-bucketed
-    # index (corpus side co-located, batch side shuffles).
-    bitmap = spark.table(names["bloom"])
-    probed = batch.crossJoin(F.broadcast(bitmap)).withColumn(
+    # (2) exact tier: broadcast the standing bloom bitset; only
+    # bloom-positive rows reach the anti join against the standing
+    # fingerprints (fp-bucketed in the durable form: corpus side
+    # co-located, batch side shuffles).
+    probed = batch.crossJoin(F.broadcast(standing["bloom"])).withColumn(
         "maybe_seen", bloom_might_contain(F.xxhash64("fp"))
     )
-    old_fps = spark.table(names["fps"]).select("fp")
+    old_fps = standing["fps"].select("fp")
     new_vs_old = probed.filter(~F.col("maybe_seen")).unionByName(
         probed.filter(F.col("maybe_seen")).join(old_fps, "fp", "left_anti")
     )
@@ -1861,11 +1699,11 @@ def _indexed_admit_vs_standing(
     )
 
     # (3) near-dup tier vs the standing corpus: batch bands (batch-
-    # sized minhash) equi-join the (band, bucket)-bucketed postings;
-    # candidates verify by exact Jaccard against the doc_id-bucketed
-    # shingle store — only band-colliding old_ids are ever read.
-    # Both relations are re-read by the full path's within-batch tier;
-    # persisted batch-sized, cleared per bench row. ONE n=3 batch
+    # sized minhash) equi-join the standing (band, bucket) postings;
+    # candidates verify by exact Jaccard against the standing shingle
+    # store — only band-colliding old_ids are ever read.
+    # Both batch relations are re-read by the full path's within-batch
+    # tier; persisted batch-sized, cleared per bench row. ONE n=3 batch
     # shingle pass (persisted) feeds both the minhash bands and the
     # hashed verification shingles — r15: each previously re-ran the
     # normalize+split+shingle chain over the batch.
@@ -1877,41 +1715,46 @@ def _indexed_admit_vs_standing(
     bands_batch = _admit_scratch(
         spark, f"{tag}|bands", band_buckets(spark, sf_dir, sh=sh3_batch)
     )
-    new_b = bands_batch.join(b2.select("doc_id"), "doc_id", "left_semi")
-    old_b = spark.table(names["bands"])
-    cand_old = (
-        new_b.select(F.col("doc_id").alias("new_id"), "band", "bucket")
-        .join(
-            old_b.select(F.col("doc_id").alias("old_id"), "band", "bucket"),
-            ["band", "bucket"],
-        )
-        .select("new_id", "old_id")
-        .distinct()
-    )
-    sh_batch = _admit_scratch(
-        spark,
-        f"{tag}|sh",
-        sh3_batch.select(
-            "doc_id",
-            F.array_distinct(
-                F.transform(F.col("shingles"), lambda s: F.xxhash64(s))
-            ).alias("hs"),
-        ),
-    )
-    left = sh_batch.select(F.col("doc_id").alias("new_id"), F.col("hs").alias("sa"))
-    right = spark.table(names["shingles"]).select(
-        F.col("doc_id").alias("old_id"), F.col("hs").alias("sb")
-    )
-    jac = jaccard_of("sa", "sb")
+    sh_batch = _admit_scratch(spark, f"{tag}|sh", hash_shingles(sh3_batch))
     drop_vs_old = (
-        cand_old.join(left, "new_id")
-        .join(right, "old_id")
-        .filter(jac >= 0.5)
-        .select(F.col("new_id").alias("doc_id"))
+        verified_band_pairs(
+            bands_batch.join(b2.select("doc_id"), "doc_id", "left_semi"),
+            standing["bands"],
+            sh_batch,
+            standing["shingles"],
+        )
+        .select(F.col("left_id").alias("doc_id"))
         .distinct()
     )
     b3 = b2.join(drop_vs_old, "doc_id", "left_anti")
     return b3, bands_batch, sh_batch
+
+
+def _admit_incremental(
+    spark: SparkSession, sf_dir: str, standing: dict[str, DataFrame], tag: str
+) -> DataFrame:
+    """The full incremental admission against ``standing``: tiers
+    (1)-(3) of ``_indexed_admit_vs_standing``, then (4) within-batch
+    near-dups — the verified batch-batch pair graph through min-label
+    components, cluster minimum survives. Every per-ingest relation is
+    batch-sized; the min-label loop never touches the standing corpus."""
+    from benchviz_spark.operators.dedup import (
+        min_label_components,
+        verified_band_pairs,
+    )
+
+    b3, bands_batch, sh_batch = _indexed_admit_vs_standing(
+        spark, sf_dir, standing, tag, within_batch_rn=True
+    )
+    # b3 is consumed three times below (band semi join, component
+    # universe, final survivor semi join) — persist the batch-sized
+    # survivor set so the vs-standing tiers run once.
+    b3 = _admit_scratch(spark, f"{tag}|b3full", b3)
+    b3_b = bands_batch.join(b3.select("doc_id"), "doc_id", "left_semi")
+    pairs_nn = verified_band_pairs(b3_b, b3_b, sh_batch, sh_batch, ordered=True)
+    comp = min_label_components(spark, pairs_nn, b3.select("doc_id"))
+    minima = comp.filter(F.col("doc_id") == F.col("cluster_id")).select("doc_id")
+    return _with_split(b3.join(minima, "doc_id", "left_semi"))
 
 
 def admission_delta_indexed(
@@ -1926,62 +1769,27 @@ def admission_delta_indexed(
     the batch form of 'the epoch index is the single admission source
     of truth'."""
     b3, _, _ = _indexed_admit_vs_standing(
-        spark, sf_dir, prefix, within_batch_rn=False
+        spark,
+        sf_dir,
+        admission_tables(spark, prefix),
+        f"{sf_dir}|{prefix}",
+        within_batch_rn=False,
     )
-    return _with_split(b3).select(
-        "doc_id", "lang", "source", "n_chars", "split"
-    )
+    return _with_split(b3)
 
 
 def incremental_batch_indexed(
     spark: SparkSession, sf_dir: str, prefix: str = "admission"
 ) -> DataFrame:
-    """``curation_incremental_batch`` consuming the DURABLE index
-    instead of rebuilding the standing side in-session: identical
-    admission semantics (same gates, same two dedup tiers, same
-    within-batch components, same splits — equivalence pinned in
-    tests/test_curation.py and by the shared golden oracle), but every
-    per-ingest relation is batch-sized. The only corpus-sized reads
-    are the bucketed index tables, which join WITHOUT moving: the
-    batch side shuffles to the index's bucketing, the corpus side is
-    scanned in place."""
-    from benchviz_spark.operators.dedup import min_label_components
-
-    b3, bands_batch, sh_batch = _indexed_admit_vs_standing(
-        spark, sf_dir, prefix, within_batch_rn=True
-    )
-    # b3 is consumed three times below (band semi join, component
-    # universe, final survivor semi join) — persist the batch-sized
-    # survivor set so the vs-standing tiers run once.
-    b3 = _admit_scratch(spark, f"{sf_dir}|{prefix}|b3full", b3)
-    jac = jaccard_of("sa", "sb")
-
-    # (4) within-batch near-dups: unchanged from the in-session path —
-    # it was always batch-sized.
-    b3_b = bands_batch.join(b3.select("doc_id"), "doc_id", "left_semi")
-    cand_nn = (
-        b3_b.select(F.col("doc_id").alias("left_id"), "band", "bucket")
-        .join(
-            b3_b.select(F.col("doc_id").alias("right_id"), "band", "bucket"),
-            ["band", "bucket"],
-        )
-        .filter(F.col("left_id") < F.col("right_id"))
-        .select("left_id", "right_id")
-        .distinct()
-    )
-    lshj = sh_batch.select(F.col("doc_id").alias("left_id"), F.col("hs").alias("sa"))
-    rshj = sh_batch.select(F.col("doc_id").alias("right_id"), F.col("hs").alias("sb"))
-    pairs_nn = (
-        cand_nn.join(lshj, "left_id")
-        .join(rshj, "right_id")
-        .filter(jac >= 0.5)
-        .select("left_id", "right_id")
-    )
-    comp = min_label_components(spark, pairs_nn, b3.select("doc_id"))
-    minima = comp.filter(F.col("doc_id") == F.col("cluster_id")).select("doc_id")
-    delta = b3.join(minima, "doc_id", "left_semi")
-    return _with_split(delta).select(
-        "doc_id", "lang", "source", "n_chars", "split"
+    """``curation_incremental_batch`` against the DURABLE index tables
+    instead of in-memory standing relations: the same tier function,
+    so the same admission semantics (equivalence pinned in
+    tests/test_curation.py and by the shared golden oracle). The only
+    corpus-sized reads are the bucketed index tables, which join
+    WITHOUT moving: the batch side shuffles to the index's bucketing,
+    the corpus side is scanned in place."""
+    return _admit_incremental(
+        spark, sf_dir, admission_tables(spark, prefix), f"{sf_dir}|{prefix}"
     )
 
 
@@ -1997,7 +1805,7 @@ def curation_incremental_batch_indexed(
     (build once, ingest many) is measured separately by
     scripts/incremental_admission_probe.py's indexed mode, where the
     build is excluded and the fixed-batch corpus-x10 ratio must land
-    ~1.0 (vs x1.61 for the in-session rebuild)."""
+    ~1.0."""
     build_admission_index(spark, sf_dir)
     return incremental_batch_indexed(spark, sf_dir)
 

@@ -91,6 +91,41 @@ def jaccard_of(sa: str | Column, sb: str | Column) -> Column:
     )
 
 
+def verified_band_pairs(
+    left_bands: DataFrame,
+    right_bands: DataFrame,
+    left_sh: DataFrame,
+    right_sh: DataFrame,
+    ordered: bool = False,
+) -> DataFrame:
+    """(left_id, right_id): documents that share a (band, bucket) LSH
+    posting (``band_buckets`` rows on each side) AND whose hashed
+    shingle sets (``hash_shingles`` rows) reach exact Jaccard >= 0.5 —
+    the band-join -> verification step of every admission near-dup
+    tier, vs the standing corpus and within the batch alike.
+    Candidates are deduped across bands before the two shingle joins,
+    so each pair is verified once. ``ordered`` keeps left_id < right_id
+    for a self-join of one side, so each unordered pair appears once."""
+    cand = left_bands.select(
+        F.col("doc_id").alias("left_id"), "band", "bucket"
+    ).join(
+        right_bands.select(F.col("doc_id").alias("right_id"), "band", "bucket"),
+        ["band", "bucket"],
+    )
+    if ordered:
+        cand = cand.filter(F.col("left_id") < F.col("right_id"))
+    left = left_sh.select(F.col("doc_id").alias("left_id"), F.col("hs").alias("sa"))
+    right = right_sh.select(F.col("doc_id").alias("right_id"), F.col("hs").alias("sb"))
+    return (
+        cand.select("left_id", "right_id")
+        .distinct()
+        .join(left, "left_id")
+        .join(right, "right_id")
+        .filter(jaccard_of("sa", "sb") >= 0.5)
+        .select("left_id", "right_id")
+    )
+
+
 def shingled_documents(
     spark: SparkSession,
     sf_dir: str,
@@ -107,6 +142,17 @@ def shingled_documents(
         docs = load_table(spark, sf_dir, "documents")
     toks = F.split(_norm_text(F.col("text")), " ")
     return docs.select("doc_id", _shingles(toks, n).alias("shingles"))
+
+
+def hash_shingles(sh: DataFrame) -> DataFrame:
+    """(doc_id, shingles) -> (doc_id, hs array<long>): the distinct
+    shingles hashed to int64."""
+    return sh.select(
+        "doc_id",
+        F.array_distinct(
+            F.transform(F.col("shingles"), lambda s: F.xxhash64(s))
+        ).alias("hs"),
+    )
 
 
 def hashed_shingled_documents(
@@ -129,13 +175,7 @@ def hashed_shingled_documents(
     normalize+shingle chain per consumer — measured as the dominant
     cost of the jaccard pair query. Single-consumer callers (minhash)
     leave it lazy and pay no write."""
-    sh = shingled_documents(spark, sf_dir, n, docs=docs)
-    out = sh.select(
-        "doc_id",
-        F.array_distinct(
-            F.transform(F.col("shingles"), lambda s: F.xxhash64(s))
-        ).alias("hs"),
-    )
+    out = hash_shingles(shingled_documents(spark, sf_dir, n, docs=docs))
     if materialize:
         return spread(spark, out).localCheckpoint(eager=True)
     return out

@@ -190,16 +190,10 @@ def query(
 
 
 def _load_all() -> None:
+    # Strict: a missing query module must fail, not silently shrink the
+    # oracle gate.
     for mod in _QUERY_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError as err:
-            # Only swallow "this query module isn't built yet"; a missing
-            # third-party import *inside* a module must fail loudly or the
-            # correctness gate shrinks silently.
-            if err.name != mod:
-                raise
-            continue
+        importlib.import_module(mod)
 
 
 def all_queries() -> dict[str, QueryFn]:

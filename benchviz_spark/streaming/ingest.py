@@ -150,6 +150,7 @@ def run_admission_stream(
         _indexed_admit_vs_standing,
         _with_split,
         admission_index_names,
+        admission_tables,
     )
     from benchviz_spark.streaming.windows import read_documents_stream
 
@@ -167,12 +168,14 @@ def run_admission_stream(
     def admit(batch_df: DataFrame, batch_id: int) -> None:
         # exactly-once per batch: overwrite this batch's own partition
         b3, _, _ = _indexed_admit_vs_standing(
-            spark, sf_dir, prefix, within_batch_rn=False, docs=batch_df
+            spark,
+            sf_dir,
+            admission_tables(spark, prefix),
+            f"{sf_dir}|{prefix}",
+            within_batch_rn=False,
+            docs=batch_df,
         )
-        delta = _with_split(b3).select(
-            "doc_id", "lang", "source", "n_chars", "split"
-        )
-        delta.write.mode("overwrite").parquet(
+        _with_split(b3).write.mode("overwrite").parquet(
             os.path.join(out_dir, f"batch={batch_id}")
         )
 

@@ -609,7 +609,9 @@ def stream_dedup_admission(
     # ~2048 per-entry literal Columns (~6 s of py4j) into two array
     # literals, but F.lit over a 1024-element Python list still
     # serialized element-by-element — profiled at ~1 s of the ~2.1 s
-    # steady-state plan build (scripts/opt_profile_stream_admission.py).
+    # steady-state plan build (OPTIMIZATION_r16.md; `perfbench/run.py
+    # --workload curation_sf001 --trace 1` gives the current build/exec
+    # split).
     # A SQL literal string parses JVM-side in milliseconds and
     # constant-folds to the identical map<int,bigint>.
     bloom_keys = [int(k) for k in sorted(bloom_map)]
@@ -724,6 +726,4 @@ def stream_dedup_admission(
         .filter(~F.col("dropped"))
         .drop("dropped")
     )
-    return _with_split(admitted).select(
-        "doc_id", "lang", "source", "n_chars", "split"
-    )
+    return _with_split(admitted)

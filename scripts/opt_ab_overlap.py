@@ -12,9 +12,10 @@ This harness times the overlap-consuming queries cold (bench
 discipline: clear_caches before every row, noop sink) under three
 widths of ``SPARK_GRAFT_OVERLAP_WORKERS``:
 
-  full    unset — every pool at its subtree count (committed r15 shape)
+  full    64 — wider than any pool, so every pool runs at its subtree
+          count (the r15 shape)
   w1      1 — fully serial construction
-  w2      2 — pools capped at two in-flight subtrees
+  w2      2 — pools capped at two in-flight subtrees (the default)
 
 alternating arms within one session so JVM/GC state is shared.
 
@@ -35,7 +36,7 @@ from benchviz_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-ARMS = {"full": "", "w1": "1", "w2": "2"}
+ARMS = {"full": "64", "w1": "1", "w2": "2"}
 
 
 def main() -> None:
@@ -63,10 +64,7 @@ def main() -> None:
     results: dict[str, list[float]] = {}
     for rep in range(3):
         for arm, env in ARMS.items():
-            if env:
-                os.environ["SPARK_GRAFT_OVERLAP_WORKERS"] = env
-            else:
-                os.environ.pop("SPARK_GRAFT_OVERLAP_WORKERS", None)
+            os.environ["SPARK_GRAFT_OVERLAP_WORKERS"] = env
             for qname, fn in queries.items():
                 label = f"{arm}/{qname}"
                 clear_caches()

@@ -10,6 +10,8 @@ import os
 import subprocess
 import sys
 
+import pytest
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
@@ -181,27 +183,28 @@ def test_bench_loaded_retime_cannot_confirm():
     )
 
 
-def test_overlap_pool_width_is_capped():
+def test_overlap_pool_width_is_capped(monkeypatch):
     """The §2.6 subtree-construction pools are bounded at TWO in-flight
     subtrees by default (r16 A/B: nested full-width pools thrashed the
     32-way scheduler — dedup_multimodal_clusters 20.1 s full vs 8.9 s
-    capped), with the env override as the per-host probe lever."""
-    import os
-
+    capped), with the env override as the per-host probe lever. An
+    override that is not a positive integer fails loudly instead of
+    being coerced to the default."""
     from benchviz_spark.concurrency import overlap_workers
 
-    assert os.environ.get("SPARK_GRAFT_OVERLAP_WORKERS") is None
+    monkeypatch.delenv("SPARK_GRAFT_OVERLAP_WORKERS", raising=False)
     assert overlap_workers(1) == 1
     assert overlap_workers(2) == 2
     assert overlap_workers(3) == 2
     assert overlap_workers(4) == 2
-    os.environ["SPARK_GRAFT_OVERLAP_WORKERS"] = "1"
-    try:
-        assert overlap_workers(4) == 1
-        os.environ["SPARK_GRAFT_OVERLAP_WORKERS"] = "3"
-        assert overlap_workers(4) == 3
-    finally:
-        del os.environ["SPARK_GRAFT_OVERLAP_WORKERS"]
+    monkeypatch.setenv("SPARK_GRAFT_OVERLAP_WORKERS", "1")
+    assert overlap_workers(4) == 1
+    monkeypatch.setenv("SPARK_GRAFT_OVERLAP_WORKERS", "3")
+    assert overlap_workers(4) == 3
+    for bad in ("0", "-1", "x"):
+        monkeypatch.setenv("SPARK_GRAFT_OVERLAP_WORKERS", bad)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_OVERLAP_WORKERS"):
+            overlap_workers(4)
 
 
 def test_bench_steal_gate():

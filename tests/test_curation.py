@@ -139,16 +139,31 @@ def test_indexed_admission_matches_in_session(spark):
     reproduce the in-session admission delta EXACTLY — same gates,
     same exact/near-dup tiers, same within-batch components, same
     splits. Any divergence means corpus state leaked into admission
-    semantics through the index build."""
+    semantics through the index build. The in-session run starts from
+    an empty catalog and cold caches and must leave no admission table
+    behind: it admits against in-memory standing relations."""
+    from benchviz_spark.caching import clear_caches
     from benchviz_spark.operators.curation import (
         build_admission_index,
         curation_incremental_batch,
         incremental_batch_indexed,
     )
 
+    def admission_tables():
+        return sorted(
+            t.name
+            for t in spark.catalog.listTables()
+            if t.name.startswith("admission_")
+        )
+
+    for name in admission_tables():
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+    clear_caches()
     base = sorted(
         map(tuple, curation_incremental_batch(spark, SF_DIR).collect())
     )
+    assert admission_tables() == []
+    clear_caches()
     build_admission_index(spark, SF_DIR)
     indexed = sorted(
         map(tuple, incremental_batch_indexed(spark, SF_DIR).collect())

@@ -147,14 +147,6 @@ _ALLOWED_HINTS: dict[str, set[str]] = {
     # curated-chain hint (the flagged-set anti-join) as in every
     # curation consumer; the order window is PARTITIONED by shard
     "curation_curriculum_order": {"documents"},
-    # incremental admission: the broadcast sides are the standing
-    # corpus's FIXED ~8 KiB Bloom bitset (1-row map aggregate — the
-    # same bounded artifact as dedup_incremental_new_docs) plus the
-    # decontam chain's eval-carve-bounded hints inherited through
-    # _incremental_gated. (Missed when the query landed late in r12 —
-    # the first committed full-suite record, scripts/pytest_record.py,
-    # caught the gap.)
-    "curation_incremental_batch": {"documents"},
 }
 
 # Unpartitioned windows over entity-bounded domains (not SF-scaled).
