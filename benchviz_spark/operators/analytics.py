@@ -31,6 +31,7 @@ definition check, not an approximation.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
@@ -364,7 +365,6 @@ _KS_SCHEMA = "dow int, n_purchase long, n_click long, ks_stat double"
 
 def _ks_fn(left, right):
     import numpy as np
-    import pandas as pd
 
     if len(left) == 0 or len(right) == 0:
         return pd.DataFrame(
@@ -481,7 +481,7 @@ def stats_value_gini_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchases carry all revenue"). Implemented as a GROUPED_AGG
     pandas_udf: the custom-aggregate surface (SURVEY §2.10) that
     built-in aggregates don't cover, Arrow-batched per group rather
-    than per row.
+    than per row, declared by ``pd.Series -> float`` type hints.
 
     The UDF sorts its group and applies the exact sorted-index
     identity G = 2*sum(i*x_i)/(n*sum(x)) - (n+1)/n — the same spec the
@@ -498,13 +498,14 @@ def stats_value_gini_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     two sums are ordinary windows/aggregates. Skewed type cardinality
     would use the same salting rewrite as skew.py."""
     import numpy as np
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    # explicit GROUPED_AGG functionType: this module uses
-    # `from __future__ import annotations`, which stringifies type
-    # hints and defeats pandas_udf's signature inference
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def gini(v):
+    # Series -> scalar hints make this a grouped-agg UDF. This module
+    # uses `from __future__ import annotations`, so pandas_udf resolves
+    # the string hints through typing.get_type_hints against the module
+    # globals: `pd` must be imported at module level.
+    @pandas_udf("double")
+    def gini(v: pd.Series) -> float:
         x = np.sort(v.to_numpy(dtype="float64"))
         n = x.size
         if n == 0 or x.sum() == 0:

@@ -3,8 +3,10 @@
 The reference's pipeline is: S3 sync -> walk tree -> parse -> nest ->
 one JSON per test + catalog -> publish. On Spark that collapses into a
 single lazy plan: text scan (with partition-style pruning by path) ->
-native regex projections -> LWW dedup window -> one shuffle for the
-per-test aggregation -> parallel serving writes. The S3 sync steps
+native regex projections -> LWW dedup window -> one range exchange that
+clusters the fact table by (package, test_name) -> parallel serving
+writes. The per-test aggregation and the point lookups read that
+clustering and add no shuffle of their own. The S3 sync steps
 dissolve: ``spark.read`` addresses ``s3a://`` URIs directly.
 """
 
@@ -56,11 +58,20 @@ def catalog_listing(fact: DataFrame) -> DataFrame:
 def point_lookup(fact: DataFrame, package: str, test_name: str) -> DataFrame:
     """Reference S9: fetch one test's chronological series. The equality
     predicates prune partitions/files when the fact table is stored
-    partitioned by package."""
+    partitioned by package.
+
+    The order key is (package, test_name, run_date), not run_date alone:
+    under the two equality filters both give the same row order, but the
+    three-column key is the one ``build_fact_table`` clusters by. Over
+    that cached layout Catalyst finds the ordering already satisfied
+    (RangePartitioning(package, test_name) satisfies the ordered
+    distribution on the longer key), so the plan has no Exchange and no
+    Sort and the lookup runs as one job. Over any other input the result
+    is the same, at the cost of the usual range exchange and sort."""
     return (
         fact.filter((F.col("package") == package) & (F.col("test_name") == test_name))
+        .orderBy("package", "test_name", "run_date")
         .select("run_date", "ns_per_op", "allocs_per_op", "bytes_per_op", "mb_per_s")
-        .orderBy("run_date")
     )
 
 
@@ -185,13 +196,13 @@ def bench_regressions(
     compares 150 against 100 and flags the +50% instead of silently
     swallowing it (ADVICE r14).
 
-    Scale: still ONE window shuffle, keyed (package, test_name) — the
-    same partitioning the per-test serving aggregation uses, so a full
-    pipeline run shares the Exchange. The metric tag joins the SORT
-    key, not the partition key (a test's four series are a handful of
-    rows; hashing them apart buys nothing), and the lag guard
-    ``prev_metric == metric`` stops the window from reading across a
-    series boundary."""
+    Scale: one window keyed (package, test_name) — the key
+    ``build_fact_table`` already range-partitions by, so the window adds
+    no shuffle of its own (nor does the per-test serving aggregation).
+    The metric tag joins the SORT key, not the partition key (a test's
+    four series are a handful of rows; hashing them apart buys nothing),
+    and the lag guard ``prev_metric == metric`` stops the window from
+    reading across a series boundary."""
     unpivoted = fact.select(
         "package",
         "test_name",
@@ -445,9 +456,8 @@ def bench_log_regressions(spark: SparkSession, sf_dir: str) -> DataFrame:
     flat (worsening for a throughput is a decrease). Golden oracle =
     the flag semantics hand-applied.
 
-    Scale: one window shuffle keyed (package, test_name) — the same
-    partitioning the per-test serving aggregation uses, so a full
-    pipeline run shares the Exchange (see bench_regressions)."""
+    Scale: one window keyed (package, test_name), which reuses the fact
+    table's range partitioning on that key (see bench_regressions)."""
     root = os.path.join(tempfile.gettempdir(), "benchviz_regression_tree")
     _write_regression_tree(root)
     fact = build_fact_table(spark, root)
@@ -494,12 +504,13 @@ def bench_regressions_rolling(
     drifted away from the recent baseline (BenchmarkCreep day 3 in the
     demo tree: +10% vs yesterday, +24% vs the rolling average).
 
-    Scale: one window shuffle keyed (package, test_name, metric) — the
-    rolling frame must not read across a metric boundary, so metric
-    joins the PARTITION key here (unlike ``bench_regressions``, whose
-    lag guard suffices); a (package, test, metric) series is a handful
-    of rows, so the extra key costs nothing and removes any frame
-    guard. Same sign normalization as ``bench_regressions`` (worsening
+    Scale: one window keyed (package, test_name, metric); the fact
+    table's range partitioning on (package, test_name) already satisfies
+    it, so it adds no shuffle. The rolling frame must not read across a
+    metric boundary, so metric joins the PARTITION key here (unlike
+    ``bench_regressions``, whose lag guard suffices); a (package, test,
+    metric) series is a handful of rows, so the extra key costs nothing
+    and removes any frame guard. Same sign normalization as ``bench_regressions`` (worsening
     for MB/s is a decrease). Zero (absent-metric) rows are filtered
     out BEFORE the window, so an intermittently-reported metric
     neither deflates the rolling average nor consumes lookback frame

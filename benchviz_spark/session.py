@@ -10,6 +10,20 @@ but every knob is chosen for cluster-scale behavior first:
   AQE coalescer makes the static number mostly irrelevant.
 - UTC session timezone so timestamp semantics are stable across the
   Spark/DuckDB oracle boundary.
+- DataFrame debugging off (``spark.python.sql.dataFrameDebugging.enabled``,
+  on by default in Spark 4.1). With it on, every ``F.col`` call and every
+  Column method captures its Python call site: it looks up the active
+  session, reads ``stackTracesInDataFrameContext`` over py4j, walks the
+  Python stack (re-trying a failing ``import ipykernel``), then sets and
+  clears the origin with two more py4j calls. That is about 10 extra
+  py4j round trips per Column method, paid by every query's
+  construction. With it off, an analysis error no longer names the
+  Python ``file:line`` that built the failing Column; it keeps its
+  error class and the plan.
+- Python workers find this package from any working directory: its
+  parent directory is prepended to the workers' ``PYTHONPATH``
+  (``spark.executorEnv.PYTHONPATH``), so pandas-UDF, codec and streaming
+  queries do not depend on being launched from the repository root.
 """
 
 from __future__ import annotations
@@ -17,6 +31,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory that holds the benchviz_spark package (this file's
+# package), which Python workers need on their path
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_WORKER_PATH_KEY = "spark.executorEnv.PYTHONPATH"
 
 
 def get_spark(
@@ -62,8 +81,14 @@ def get_spark(
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
         # Keep timestamps as written by the generator (no rebase surprises).
         .config("spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED")
+        # no per-Column Python call-site capture (see module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
-    for key, value in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    conf[_WORKER_PATH_KEY] = os.pathsep.join(
+        p for p in (_PACKAGE_PARENT, conf.get(_WORKER_PATH_KEY)) if p
+    )
+    for key, value in conf.items():
         builder = builder.config(key, value)
 
     spark = builder.getOrCreate()

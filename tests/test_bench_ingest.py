@@ -4,6 +4,7 @@ test fixtures, file_generator_test.go:35-65)."""
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 
@@ -260,6 +261,62 @@ def test_pipeline_end_to_end(spark, sample_tree, tmp_path):
     assert sorted(catalog["sql"]) == catalog["sql"]
     series = point_lookup(fact, "sql", "BenchmarkBank2_Cockroach-8").collect()
     assert len(series) == 1 and series[0].ns_per_op == 1328086
+
+
+def test_point_lookup_over_pipeline_fact_is_one_job(spark, sample_tree, tmp_path):
+    """Over run_pipeline's cached, clustered fact table a lookup needs no
+    range-sampling job and no shuffle: exactly one Spark job."""
+    fact = run_pipeline(spark, sample_tree, str(tmp_path / "deploy"))
+    sc = spark.sparkContext
+    group = "test_point_lookup_one_job"
+    sc.setJobGroup(group, "point_lookup over the pipeline fact")
+    try:
+        rows = point_lookup(fact, "sql", "BenchmarkBank2_Cockroach-8").collect()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    assert len(rows) == 1
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+@pytest.fixture(scope="module")
+def series_tree(tmp_path_factory):
+    """Several multi-date series over three packages. The date dirs'
+    names sort differently from their dates (02-01-2016 < 15-12-2015 <
+    31-01-2015 as strings), so only a date-aware order passes."""
+    root = str(tmp_path_factory.mktemp("seriesSamples"))
+    dates = ("31-01-2015", "15-12-2015", "02-01-2016", "10-06-2016")
+    for day, date in enumerate(dates):
+        for pkg in ("kv", "sql", "storage"):
+            _write(root, date, pkg, "s.test.stdout", [
+                f"BenchmarkSeries{i}-8 \t 10 \t {100 * i + day} ns/op"
+                for i in range(4)
+            ])
+    return root
+
+
+def test_point_lookup_rows_in_run_date_order(spark, series_tree):
+    """point_lookup returns its series in run_date order, both over the
+    clustered cached fact table and over an unclustered input (a
+    createDataFrame copy of the same rows, reversed, in 3 partitions)."""
+    expected = [
+        datetime.date(2015, 1, 31),
+        datetime.date(2015, 12, 15),
+        datetime.date(2016, 1, 2),
+        datetime.date(2016, 6, 10),
+    ]
+    clustered = build_fact_table(spark, series_tree).cache()
+    try:
+        rows = clustered.collect()
+        unclustered = spark.createDataFrame(rows[::-1], clustered.schema).repartition(3)
+        for fact in (clustered, unclustered):
+            for pkg in ("kv", "storage"):
+                for i in (0, 3):
+                    series = point_lookup(fact, pkg, f"BenchmarkSeries{i}-8").collect()
+                    assert [r.run_date for r in series] == expected
+                    assert [r.ns_per_op for r in series] == [100 * i + d for d in range(4)]
+    finally:
+        clustered.unpersist()
 
 
 def test_catalog_listing_priority_order(spark):

@@ -43,7 +43,9 @@ def test_bench_emits_single_json_line(tmp_path):
     parseable JSON object, small enough to survive the driver's ~2.2 KB
     stdout-tail capture, with the full per-query map in a file. The
     timings go to a scratch dir so the smoke never churns the committed
-    .benchmarks files."""
+    .benchmarks files. It runs with cwd=tmp_path, so its Spark warehouse
+    (and the admission_* tables it rewrites) is its own, not the one the
+    test session's memoized admission index reads."""
     env = dict(
         os.environ,
         SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
@@ -60,7 +62,7 @@ def test_bench_emits_single_json_line(tmp_path):
         # full-registry smoke at 4 CPUs runs ~8 min; 560 s left no
         # headroom on a loaded host.
         timeout=900,
-        cwd=REPO,
+        cwd=str(tmp_path),
     )
     assert out.returncode == 0, out.stderr[-2000:]
     lines = [l for l in out.stdout.strip().splitlines() if l.strip()]
@@ -78,6 +80,46 @@ def test_bench_emits_single_json_line(tmp_path):
     with open(os.path.join(REPO, payload["timings_file"])) as fh:
         full = json.load(fh)
     assert len(full["queries"]) == payload["n_queries"]
+
+
+def test_session_turns_off_dataframe_debugging(spark):
+    """get_spark skips PySpark's per-Column call-site capture (about 10
+    py4j round trips per Column method)."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
+_ANY_CWD_SCRIPT = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from benchviz_spark.registry import all_queries
+from benchviz_spark.session import get_spark
+
+spark = get_spark(shuffle_partitions=2)
+qs = all_queries()
+for name in ("dedup_image_dhash_fingerprints", "stream_image_dedup_gate"):
+    print(name, qs[name](spark, sys.argv[2]).count())
+"""
+
+
+def test_python_workers_import_package_from_any_cwd(tmp_path, sf_smoke_dir):
+    """A mapInPandas codec query and a streaming query run from a
+    directory outside the repository, with no PYTHONPATH: the Python
+    workers find benchviz_spark through the session's
+    spark.executorEnv.PYTHONPATH, not through the working directory."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_CPUS"] = "2"
+    out = subprocess.run(
+        [sys.executable, "-c", _ANY_CWD_SCRIPT, REPO, sf_smoke_dir],
+        capture_output=True,
+        text=True,
+        env=env,
+        timeout=560,
+        cwd=str(tmp_path),
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    counts = dict(line.split()[:2] for line in out.stdout.splitlines() if line.strip())
+    for name in ("dedup_image_dhash_fingerprints", "stream_image_dedup_gate"):
+        assert int(counts[name]) > 0, out.stdout
 
 
 def test_bench_regression_guard():

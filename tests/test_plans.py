@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
+import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -540,8 +542,10 @@ def test_serving_json_single_aggregation_no_collect(spark):
     df = serving_per_test_json(spark, SF_DIR)
     plan = formatted_plan(df)
     # exactly one partial+final pair for the document assembly (the
-    # collect_list rides ObjectHashAggregate), stacked on the ingest's
-    # own LWW window exchange and the output orderBy — nothing more
+    # collect_list rides ObjectHashAggregate). The plan holds two
+    # exchanges: the ingest's LWW window (hash) and the fact table's
+    # (package, test_name) clustering (range). The aggregation and the
+    # output orderBy on the same key both reuse the clustering
     assert plan.count("ObjectHashAggregate (") == 2, plan
     assert plan.count("Exchange (") <= 3, plan
     assert "SortAggregate" not in plan, plan
@@ -566,3 +570,52 @@ def test_serving_listing_window_is_catalog_bounded(spark):
     assert "HashAggregate" in plan, plan
     assert "SinglePartition" in plan, plan
     assert "CartesianProduct" not in plan, plan
+
+
+def _cached_demo_fact(spark):
+    """The demo tree's fact table, cached and materialized, as
+    run_pipeline serves from it."""
+    from benchviz_spark.pipeline import _write_demo_tree
+    from benchviz_spark.sources.bench_logs import build_fact_table
+
+    root = os.path.join(tempfile.gettempdir(), "benchviz_demo_tree")
+    _write_demo_tree(root)
+    fact = build_fact_table(spark, root).cache()
+    fact.count()
+    return fact
+
+
+def _above_cache_scan(plan: str) -> list[str]:
+    """The tree lines of a formatted plan above its InMemoryTableScan
+    (the operators that run on top of the cached relation)."""
+    tree = plan.split("\n\n")[0].splitlines()
+    cut = next(i for i, line in enumerate(tree) if "InMemoryTableScan" in line)
+    return tree[:cut]
+
+
+def test_point_lookup_over_clustered_cache_needs_no_exchange_or_sort(spark):
+    """build_fact_table clusters by (package, test_name) and sorts by
+    (package, test_name, run_date); over the cached table point_lookup's
+    ordering is already satisfied, so nothing shuffles or sorts."""
+    from benchviz_spark.pipeline import point_lookup
+
+    fact = _cached_demo_fact(spark)
+    try:
+        plan = formatted_plan(point_lookup(fact, "sql", "BenchmarkScan1000_Cockroach-16"))
+        above = _above_cache_scan(plan)
+        assert not [l for l in above if "Exchange" in l or "Sort" in l], plan
+    finally:
+        fact.unpersist()
+
+
+def test_per_test_json_over_clustered_cache_adds_no_exchange(spark):
+    """The per-test aggregation is keyed (package, test_name), which the
+    cached fact's range partitioning already satisfies."""
+    from benchviz_spark.serving.json_sink import per_test_json
+
+    fact = _cached_demo_fact(spark)
+    try:
+        plan = formatted_plan(per_test_json(fact))
+        assert not [l for l in _above_cache_scan(plan) if "Exchange" in l], plan
+    finally:
+        fact.unpersist()
