@@ -14,7 +14,7 @@ in-flight subtrees regardless of how many a call site has:
 - The guide's own sizing rule is "2-3 jobs in flight is plenty", and
   the r15 driver run measured the widest overlap queries INVERTING on
   32 cores (curation_mixture_report_multimodal scaling ratio 0.41:
-  faster on 8 cores than 32). The r16 A/B (scripts/opt_ab_overlap.py,
+  faster on 8 cores than 32). The r16 A/B (OPTIMIZATION_r16.md §1,
   3 alternating cold reps at 32 cores) adjudicated it: medians
   full-width / serial / width-2 — dedup_multimodal_clusters 20.1 /
   8.1 / 8.9 s, curation_mixture_report_multimodal 13.0 / 15.8 /

@@ -1369,7 +1369,7 @@ def min_label_components(
     # scan; the self-loop form grows linearly in k and halves the leaf
     # scans per step. Identical min-fold: min(own ∪ neighbors) — the
     # self-loop delivers `own`. A/B'd at 32 cores over 5 reps
-    # (scripts/opt_ab_components.py): deep multimodal graph median
+    # (OPTIMIZATION_r16.md §2): deep multimodal graph median
     # 3.97 -> 2.67 s, shallow text graph 1.16 -> 0.89 s,
     # row-identical output asserted.
     edges = edges.union(
@@ -1403,7 +1403,7 @@ def min_label_components(
     # so higher k pays back inside the block what it saves in
     # scheduling).
     #
-    # The checkpoints are LAZY (r15 A/B, scripts/opt_ab_components.py):
+    # The checkpoints are LAZY (r15 A/B, OPTIMIZATION_r15.md §9):
     # the label-sum convergence action is the loop's natural
     # materializer, so an eager checkpoint's separate job per block is
     # pure duplicate cost — one action per block instead of two
@@ -1726,9 +1726,10 @@ def dedup_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame
 
     30x-probe note: within a session this query reads the MEMOIZED
     clusters relation (``_CLUSTERS_CACHE``) and pays only this
-    fingerprint-sized aggregation — the HEAD re-run of
-    scripts/sf3x_dedup_probe.py records x1.3 at 30x input
-    (.benchmarks/bench_sf3x_dedup.json). The full-chain cost lives
+    fingerprint-sized aggregation — the committed 30x record
+    (.benchmarks/bench_sf3x_dedup.json, x1.3) timed it after the
+    chain in one session; ``scripts/scale_tiers.py dedup`` now times
+    every row cold, chain included. The full-chain cost lives
     with the chain: a COLD single-query run pays pair detection +
     propagation first, and those pre-memoization triples are kept
     under the record's heap_comparison (x31.4 at 32g — linear; the

@@ -21,6 +21,7 @@ from pyspark.sql.window import Window as W
 
 from benchviz_spark.registry import query
 from benchviz_spark.serving.json_sink import (
+    PRIORITY_TESTS,
     catalog_json,
     catalog_json_df,
     package_sort_key,
@@ -80,7 +81,6 @@ def point_lookup(fact: DataFrame, package: str, test_name: str) -> DataFrame:
 # as a registry query (rows-only check: its input is a generated log
 # tree, not one of the oracle's parquet views).
 # ---------------------------------------------------------------------------
-_DEMO_DATES = ("01-01-2015", "02-01-2015", "15-12-2015")
 _DEMO_LINES = {
     "sql": [
         "BenchmarkBank2_Cockroach-8 \t 1000 \t 1328086 ns/op \t 183965 B/op \t 2317 allocs/op",
@@ -96,26 +96,32 @@ _DEMO_LINES = {
 }
 
 
-def _reset_stale_tree(root: str, expected_dates: tuple[str, ...]) -> None:
-    """Remove a planted tree whose date dirs differ from the current
-    fixture. These roots live under the shared tempdir; a leftover
-    from an older checkout (different fixture dates) would otherwise
-    be silently ingested alongside the fresh dirs and break the golden
-    oracles with an environment-dependent mismatch."""
+_DEMO_TREE = {
+    date: _DEMO_LINES for date in ("01-01-2015", "02-01-2015", "15-12-2015")
+}
+
+
+def _tree_fact(spark: SparkSession, name: str, tree: dict) -> DataFrame:
+    """Plant ``tree`` ({date dir: {package: stdout lines}}) as the
+    benchSamples tree ``benchviz_<name>_tree`` under the shared tempdir
+    and return its fact table.
+
+    A planted tree whose date dirs differ from ``tree`` is removed
+    first: a leftover from an older checkout (different fixture dates)
+    would otherwise be silently ingested alongside the fresh dirs and
+    break the golden oracles with an environment-dependent mismatch."""
     import shutil
 
-    if os.path.isdir(root) and set(os.listdir(root)) != set(expected_dates):
+    root = os.path.join(tempfile.gettempdir(), f"benchviz_{name}_tree")
+    if os.path.isdir(root) and set(os.listdir(root)) != set(tree):
         shutil.rmtree(root, ignore_errors=True)
-
-
-def _write_demo_tree(root: str) -> None:
-    _reset_stale_tree(root, _DEMO_DATES)
-    for date in _DEMO_DATES:
-        for pkg, lines in _DEMO_LINES.items():
+    for date, packages in tree.items():
+        for pkg, lines in packages.items():
             d = os.path.join(root, date, "cockroach", pkg)
             os.makedirs(d, exist_ok=True)
             with open(os.path.join(d, "pkg.test.stdout"), "w") as f:
                 f.write("\n".join(lines) + "\n")
+    return build_fact_table(spark, root)
 
 
 # The demo tree is deterministic, so the flagship pipeline has an exact
@@ -160,9 +166,7 @@ def bench_log_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fact table. Exercises every reference ingest operator
     (SURVEY §2.1 S2-S3, §2.2 F1-F5, §2.4 A1). The oracle is the golden
     expected output (reference semantics hand-applied to the fixture)."""
-    root = os.path.join(tempfile.gettempdir(), "benchviz_demo_tree")
-    _write_demo_tree(root)
-    fact = build_fact_table(spark, root)
+    fact = _tree_fact(spark, "demo", _DEMO_TREE)
     return fact.select(
         "run_date",
         "package",
@@ -172,6 +176,37 @@ def bench_log_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bytes_per_op",
         "mb_per_s",
     ).orderBy("run_date", "package", "test_name")
+
+
+def _metric_series(fact: DataFrame) -> DataFrame:
+    """The fact table unpivoted (F9's stack) to one (metric, value) row
+    per REPORTED metric: N=ns/op, A=allocs/op, B=B/op, M=MB/s. Zero
+    values (metric absent -> the reference's Go zero-default) are
+    dropped here, before any window sees them."""
+    return fact.select(
+        "package",
+        "test_name",
+        "run_date",
+        F.expr(
+            "stack(4, 'N', CAST(ns_per_op AS DOUBLE),"
+            " 'A', CAST(allocs_per_op AS DOUBLE),"
+            " 'B', CAST(bytes_per_op AS DOUBLE),"
+            " 'M', CAST(mb_per_s AS DOUBLE)) AS (metric, value)"
+        ),
+    ).filter(F.col("value") > 0)
+
+
+def _worsening_pct(baseline: str) -> F.Column:
+    """Worsening % of ``value`` against the ``baseline`` column, rounded
+    to 2 places and sign-normalized: positive always means "got worse"
+    (an increase for N/A/B, a DECREASE for M — MB/s is a throughput)."""
+    base, value = F.col(baseline), F.col("value")
+    delta = F.when(F.col("metric") == "M", base - value).otherwise(value - base)
+    # The division lives INSIDE the baseline > 0 CASE branch (lazily
+    # evaluated per row) because ANSI mode raises on divide-by-zero and
+    # Catalyst is free to reorder a conjunctive filter's predicates —
+    # a guard conjunct does not protect a sibling conjunct.
+    return F.round(F.when(base > 0, delta * 100.0 / base), 2)
 
 
 def bench_regressions(
@@ -203,38 +238,16 @@ def bench_regressions(
     four series are a handful of rows; hashing them apart buys nothing),
     and the lag guard ``prev_metric == metric`` stops the window from
     reading across a series boundary."""
-    unpivoted = fact.select(
-        "package",
-        "test_name",
-        "run_date",
-        F.expr(
-            "stack(4, 'N', CAST(ns_per_op AS DOUBLE),"
-            " 'A', CAST(allocs_per_op AS DOUBLE),"
-            " 'B', CAST(bytes_per_op AS DOUBLE),"
-            " 'M', CAST(mb_per_s AS DOUBLE)) AS (metric, value)"
-        ),
-    )
     w = W.partitionBy("package", "test_name").orderBy("metric", "run_date")
-    # worsening %, sign-normalized: positive always means "got worse".
-    # The division lives INSIDE the prev_value > 0 CASE branch (lazily
-    # evaluated per row) because ANSI mode raises on divide-by-zero and
-    # Catalyst is free to reorder a conjunctive filter's predicates —
-    # a guard conjunct does not protect a sibling conjunct.
-    delta = F.when(
-        F.col("metric") == "M", F.col("prev_value") - F.col("value")
-    ).otherwise(F.col("value") - F.col("prev_value"))
-    pct = F.when(
-        F.col("prev_value") > 0, delta * 100.0 / F.col("prev_value")
-    )
     return (
-        unpivoted.filter(F.col("value") > 0)
+        _metric_series(fact)
         .withColumn("prev_value", F.lag("value").over(w))
         .withColumn("prev_metric", F.lag("metric").over(w))
         .filter(
             (F.col("prev_metric") == F.col("metric"))
             & (F.col("prev_value") > 0)
         )
-        .withColumn("pct_change", F.round(pct, 2))
+        .withColumn("pct_change", _worsening_pct("prev_value"))
         .filter(F.col("pct_change") > threshold_pct)
         .select(
             "package",
@@ -306,9 +319,7 @@ def serving_per_test_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one hash aggregation keyed (package, test_name) — the
     serving catalog's natural key; documents are assembled
     executor-side and the plan never collects."""
-    root = os.path.join(tempfile.gettempdir(), "benchviz_demo_tree")
-    _write_demo_tree(root)
-    fact = build_fact_table(spark, root)
+    fact = _tree_fact(spark, "demo", _DEMO_TREE)
     return per_test_json(fact).orderBy("package", "test_name")
 
 
@@ -329,10 +340,7 @@ def serving_catalog_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``{pkg: [test,...]}``, both levels sorted) over the demo tree.
     Two executor-side hash aggregations; only the one-row document
     reaches the output."""
-    root = os.path.join(tempfile.gettempdir(), "benchviz_demo_tree")
-    _write_demo_tree(root)
-    fact = build_fact_table(spark, root)
-    return catalog_json_df(fact)
+    return catalog_json_df(_tree_fact(spark, "demo", _DEMO_TREE))
 
 
 # Reference O3/O4 (generate_benchmark_list.js:29-48): priority tests
@@ -359,10 +367,7 @@ def serving_catalog_listing(spark: SparkSession, sf_dir: str) -> DataFrame:
     priority orderings are hash-visible. The window that numbers rows
     is a single global sort over the (package, test) CATALOG — catalog-
     bounded (thousands of rows at any corpus size), never data-bounded."""
-    root = os.path.join(tempfile.gettempdir(), "benchviz_demo_tree")
-    _write_demo_tree(root)
-    fact = build_fact_table(spark, root)
-    listing = catalog_listing(fact)
+    listing = catalog_listing(_tree_fact(spark, "demo", _DEMO_TREE))
     w = W.orderBy("pkg_rank", "package", "test_rank", "test_name")
     return listing.select(
         F.row_number().over(w).cast("int").alias("position"),
@@ -413,13 +418,7 @@ _REG_LINES = {
 }
 
 
-def _write_regression_tree(root: str) -> None:
-    _reset_stale_tree(root, tuple(_REG_LINES))
-    for date, lines in _REG_LINES.items():
-        d = os.path.join(root, date, "cockroach", "sql")
-        os.makedirs(d, exist_ok=True)
-        with open(os.path.join(d, "pkg.test.stdout"), "w") as f:
-            f.write("\n".join(lines) + "\n")
+_REG_TREE = {date: {"sql": lines} for date, lines in _REG_LINES.items()}
 
 
 # Hand-applied semantics, all four metrics: pct_change is the
@@ -458,9 +457,7 @@ def bench_log_regressions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one window keyed (package, test_name), which reuses the fact
     table's range partitioning on that key (see bench_regressions)."""
-    root = os.path.join(tempfile.gettempdir(), "benchviz_regression_tree")
-    _write_regression_tree(root)
-    fact = build_fact_table(spark, root)
+    fact = _tree_fact(spark, "regression", _REG_TREE)
     return bench_regressions(fact).orderBy("test_name", "metric", "run_date")
 
 
@@ -487,9 +484,7 @@ def bench_log_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     reach the scan (partition pruning when the fact table is stored
     partitioned by package — asserted for the parquet path in
     test_plans.py); here they prune at the parse projection."""
-    root = os.path.join(tempfile.gettempdir(), "benchviz_demo_tree")
-    _write_demo_tree(root)
-    fact = build_fact_table(spark, root)
+    fact = _tree_fact(spark, "demo", _DEMO_TREE)
     return point_lookup(fact, "sql", "BenchmarkScan1000_Cockroach-16")
 
 
@@ -516,31 +511,16 @@ def bench_regressions_rolling(
     neither deflates the rolling average nor consumes lookback frame
     slots — the baseline averages the up-to-``lookback`` most recent
     REPORTED runs (ADVICE r14)."""
-    unpivoted = fact.select(
-        "package",
-        "test_name",
-        "run_date",
-        F.expr(
-            "stack(4, 'N', CAST(ns_per_op AS DOUBLE),"
-            " 'A', CAST(allocs_per_op AS DOUBLE),"
-            " 'B', CAST(bytes_per_op AS DOUBLE),"
-            " 'M', CAST(mb_per_s AS DOUBLE)) AS (metric, value)"
-        ),
-    )
     w = (
         W.partitionBy("package", "test_name", "metric")
         .orderBy("run_date")
         .rowsBetween(-lookback, -1)
     )
-    delta = F.when(
-        F.col("metric") == "M", F.col("baseline") - F.col("value")
-    ).otherwise(F.col("value") - F.col("baseline"))
-    pct = F.when(F.col("baseline") > 0, delta * 100.0 / F.col("baseline"))
     return (
-        unpivoted.filter(F.col("value") > 0)
+        _metric_series(fact)
         .withColumn("baseline", F.avg("value").over(w))
         .filter(F.col("baseline") > 0)
-        .withColumn("pct_change", F.round(pct, 2))
+        .withColumn("pct_change", _worsening_pct("baseline"))
         .filter(F.col("pct_change") > threshold_pct)
         .select(
             "package",
@@ -584,9 +564,7 @@ def bench_log_regressions_rolling(spark: SparkSession, sf_dir: str) -> DataFrame
     rolling baseline flags the creep-drift day the day-over-day lag
     variant correctly ignores, and stays quiet on the exact-threshold
     (+20.0) and improving rows."""
-    root = os.path.join(tempfile.gettempdir(), "benchviz_regression_tree")
-    _write_regression_tree(root)
-    fact = build_fact_table(spark, root)
+    fact = _tree_fact(spark, "regression", _REG_TREE)
     return bench_regressions_rolling(fact).orderBy(
         "test_name", "metric", "run_date"
     )
@@ -613,13 +591,7 @@ _COMPARE_LINES = {
 }
 
 
-def _write_compare_tree(root: str) -> None:
-    _reset_stale_tree(root, tuple(_COMPARE_LINES))
-    for date, lines in _COMPARE_LINES.items():
-        d = os.path.join(root, date, "cockroach", "sql")
-        os.makedirs(d, exist_ok=True)
-        with open(os.path.join(d, "pkg.test.stdout"), "w") as f:
-            f.write("\n".join(lines) + "\n")
+_COMPARE_TREE = {date: {"sql": lines} for date, lines in _COMPARE_LINES.items()}
 
 
 # Hand-applied full-outer alignment of the two ns/op series: exactly
@@ -650,9 +622,7 @@ def bench_log_compare_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the join (see point_lookup)."""
     from benchviz_spark.operators.compare import align_series
 
-    root = os.path.join(tempfile.gettempdir(), "benchviz_compare_tree")
-    _write_compare_tree(root)
-    fact = build_fact_table(spark, root)
+    fact = _tree_fact(spark, "compare", _COMPARE_TREE)
     left = point_lookup(fact, "sql", "BenchmarkOld-8").select(
         "run_date", "ns_per_op"
     )
@@ -676,12 +646,7 @@ def bench_log_compare_series(spark: SparkSession, sf_dir: str) -> DataFrame:
 # designed ordering (sort keys, no phantoms); this query is the
 # browser-faithful rendering, quirks hash-pinned.
 # ---------------------------------------------------------------------------
-_LIST_UNSHIFT_ORDER = tuple(
-    f"Benchmark{test}{i}{suffix}"
-    for test in ("Insert", "Update", "Delete", "Scan")  # reversed js:30
-    for suffix in ("Multinode_Cockroach-16", "_Cockroach-16")  # reversed js:32
-    for i in (1000, 100, 10, 1)  # reversed js:33
-)
+_LIST_UNSHIFT_ORDER = tuple(reversed(PRIORITY_TESTS))
 
 
 def _anchor_html(directory: str, test: str) -> str:
@@ -774,7 +739,5 @@ def serving_index_html(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference F10 as a query: the index page's per-directory HTML
     over the demo tree, golden oracle = generate_benchmark_list.js
     hand-applied (32 phantom/duplicate priority links and all)."""
-    root = os.path.join(tempfile.gettempdir(), "benchviz_demo_tree")
-    _write_demo_tree(root)
-    fact = build_fact_table(spark, root)
+    fact = _tree_fact(spark, "demo", _DEMO_TREE)
     return index_html_sections(fact).orderBy("position")

@@ -408,27 +408,26 @@ def _write_serving_tree_hadoop_fs(per_test: DataFrame, out_uri: str) -> None:
             out.close()
 
 
-PRIORITY_ACTIONS = ("Scan", "Delete", "Update", "Insert")
-PRIORITY_COUNTS = (1, 10, 100, 1000)
-PRIORITY_SUFFIXES = ("_Cockroach-16", "Multinode_Cockroach-16")
+# The 32 priority test names of package 'sql', in the reference's call
+# order (generate_benchmark_list.js:30-33: action, then suffix, then
+# count).
+PRIORITY_TESTS = tuple(
+    f"Benchmark{action}{count}{suffix}"
+    for action in ("Scan", "Delete", "Update", "Insert")
+    for suffix in ("_Cockroach-16", "Multinode_Cockroach-16")
+    for count in (1, 10, 100, 1000)
+)
 
 
 def priority_sort_key(test_col: F.Column, package_col: F.Column) -> F.Column:
-    """Reference O3 as a sort-key expression: for package 'sql', tests
-    named Benchmark{Scan|Delete|Update|Insert}{1|10|100|1000}
-    {_Cockroach-16|Multinode_Cockroach-16} sort before everything else
+    """Reference O3 as a sort-key expression: for package 'sql', the
+    ``PRIORITY_TESTS`` sort before everything else
     (generate_benchmark_list.js:29-38 — we implement the documented
     *intent*; the reference's unshift loop also duplicates entries and
     prepends nonexistent tests, which are quirks of its rendering, not
     query semantics)."""
-    important = [
-        f"Benchmark{action}{count}{suffix}"
-        for action in PRIORITY_ACTIONS
-        for count in PRIORITY_COUNTS
-        for suffix in PRIORITY_SUFFIXES
-    ]
     return F.when(
-        (package_col == "sql") & test_col.isin(important), F.lit(0)
+        (package_col == "sql") & test_col.isin(*PRIORITY_TESTS), F.lit(0)
     ).otherwise(F.lit(1))
 
 

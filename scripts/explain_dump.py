@@ -3,10 +3,11 @@
 Usage:
     python scripts/explain_dump.py <suffix> <query> [<query> ...]
 
-Writes plans/r15/<query>_<suffix>.txt for each named query. The judge
-reads these files to check plan claims (Exchange counts, join
-strategies, PushedFilters) against the code, so the dump is the plan
-of the EXACT registered callable at $SPARK_GRAFT_SF_DIR.
+Writes plans/$SPARK_GRAFT_PLAN_ROUND/<query>_<suffix>.txt (default r16;
+gitignored) for each named query. A before/after pair checks plan
+claims (Exchange counts, join strategies, PushedFilters) against the
+code: the dump is the plan of the EXACT registered callable at
+$SPARK_GRAFT_SF_DIR.
 """
 
 from __future__ import annotations

@@ -7,7 +7,7 @@ cost is driven by the BATCH, not by the standing corpus. This probe
 holds the batch constant (the 2,500 src10-19 documents of sf0.1) and
 scales ONLY the standing corpus (src0-9) 10x — replicas get strided
 doc_ids and circularly rotated text (distinct fingerprints and
-shingles, same length/language stats: the scale_probe.py convention),
+shingles, same length/language stats: the scale_tiers.py recipe),
 and keep their srcN source so they stay on the SEEN side of
 _INCR_SEEN_RE.
 
@@ -30,7 +30,6 @@ Run:  python scripts/incremental_admission_probe.py [--rebuild]
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import shutil
@@ -40,11 +39,11 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-BASE_SF = "/root/testdata/sf0.1"
+from scale_tiers import BASE, build_tiers, replicate, write_single  # noqa: E402
+
 PROBE_DIR = os.path.join(REPO, ".scale_probe", "incr10x")
 OUT = os.path.join(REPO, ".benchmarks", "incremental_admission_10x.json")
 REPLICAS = 10  # standing corpus only
-DOC_STRIDE = 10_000_000
 
 
 def build_corpus(spark) -> None:
@@ -54,29 +53,10 @@ def build_corpus(spark) -> None:
     if os.path.isfile(out):
         return
     os.makedirs(PROBE_DIR, exist_ok=True)
-    base = spark.read.parquet(os.path.join(BASE_SF, "documents.parquet"))
-    standing = base.filter(F.col("source").rlike("^src[0-9]$"))
-    batch = base.filter(~F.col("source").rlike("^src[0-9]$"))
-    parts = [standing]
-    for r in range(1, REPLICAS):
-        parts.append(
-            standing.withColumn("doc_id", F.col("doc_id") + F.lit(r * DOC_STRIDE))
-            .withColumn(
-                "text",
-                F.concat(
-                    F.expr(f"substr(text, {r + 1})"), F.expr(f"substr(text, 1, {r})")
-                ),
-            )
-        )
-    reps = parts[0]
-    for p in parts[1:]:
-        reps = reps.unionByName(p)
-    reps = reps.unionByName(batch)
-    tmp = out + ".tmpdir"
-    reps.coalesce(1).write.mode("overwrite").parquet(tmp)
-    part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-    os.replace(part, out)
-    shutil.rmtree(tmp)
+    base = spark.read.parquet(os.path.join(BASE, "documents.parquet"))
+    standing = F.col("source").rlike("^src[0-9]$")
+    reps = replicate(base.filter(standing), "documents", REPLICAS)
+    write_single(reps.unionByName(base.filter(~standing)), out)
     print("built incr10x documents", file=sys.stderr)
 
 
@@ -99,7 +79,7 @@ def main() -> None:
         n = fn(spark, sf_dir).count()  # admitted-delta size is part of the record
         return round(time.perf_counter() - t0, 2), n
 
-    base_sec, base_rows = run(BASE_SF)
+    base_sec, base_rows = run(BASE)
     print(f"sf0.1 (standing 1x + batch): {base_sec}s, {base_rows} admitted",
           file=sys.stderr)
     probe_sec, probe_rows = run(PROBE_DIR)
@@ -125,7 +105,7 @@ def main() -> None:
         n = incremental_batch_indexed(spark, sf_dir, prefix=prefix).count()
         return build_sec, round(time.perf_counter() - t0, 2), n
 
-    base_build, base_ing, base_rows_ix = run_indexed(BASE_SF, "admission_p1x")
+    base_build, base_ing, base_rows_ix = run_indexed(BASE, "admission_p1x")
     print(f"sf0.1 indexed: build {base_build}s, ingest {base_ing}s, "
           f"{base_rows_ix} admitted", file=sys.stderr)
     probe_build, probe_ing, probe_rows_ix = run_indexed(PROBE_DIR, "admission_p10x")
@@ -139,24 +119,19 @@ def main() -> None:
     # row times) so the amortization claim is directly citable: the
     # once-per-epoch build share of the bundled wall vs the per-ingest
     # admit share.
-    sf1x_dir = os.path.join(REPO, ".scale_probe", "sf1x")
-    split_sf1x = None
-    if os.path.isdir(sf1x_dir):
-        s1x_build, s1x_admit, s1x_rows = run_indexed(sf1x_dir, "admission_s1x")
-        print(f"sf1x indexed (corpus AND batch x10): build {s1x_build}s, "
-              f"ingest {s1x_admit}s, {s1x_rows} admitted", file=sys.stderr)
-        split_sf1x = {
-            "build_sec": s1x_build,
-            "admit_sec": s1x_admit,
-            "admitted_rows": s1x_rows,
-            "note": (
-                "the bench_sf1x_full.json tier (corpus AND batch x10); "
-                "that record's bundled query wall = this build + admit"
-            ),
-        }
-    else:
-        print("sf1x corpus missing — run scripts/scale_probe.py first; "
-              "split_sf1x omitted", file=sys.stderr)
+    sf1x_dir = build_tiers(spark, tiers=("sf1x",))["sf1x"]
+    s1x_build, s1x_admit, s1x_rows = run_indexed(sf1x_dir, "admission_s1x")
+    print(f"sf1x indexed (corpus AND batch x10): build {s1x_build}s, "
+          f"ingest {s1x_admit}s, {s1x_rows} admitted", file=sys.stderr)
+    split_sf1x = {
+        "build_sec": s1x_build,
+        "admit_sec": s1x_admit,
+        "admitted_rows": s1x_rows,
+        "note": (
+            "the bench_sf1x_full.json tier (corpus AND batch x10); "
+            "that record's bundled query wall = this build + admit"
+        ),
+    }
     try:
         with open("/proc/loadavg") as fh:
             loadavg = [float(x) for x in fh.read().split()[:3]]

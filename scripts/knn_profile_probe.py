@@ -4,7 +4,7 @@ SCALE.md's r13 decision adopts the 0.74-recall Hamming-2 pair window
 behind SPARK_GRAFT_KNN_PROFILE=high_recall; this probe turns the
 r12 sweep's number into a committed, reproducible record under the
 shipped code: recall@K_GRAPH and wall for BOTH profiles, same corpus
-(.scale_probe/knn10x), same session discipline as knn_recall_probe.py.
+(.scale_probe/sf1x), same session discipline as knn_recall_probe.py.
 
 The profile is read at module import, so each profile runs in its own
 subprocess; the parent merges the rows into knn_recall_sf1x.json
@@ -26,7 +26,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-KNN10X = os.path.join(REPO, ".scale_probe", "knn10x")
 RECORD = os.path.join(REPO, ".benchmarks", "knn_recall_sf1x.json")
 SAMPLE_SRC = 50
 
@@ -40,32 +39,32 @@ def run_one_profile() -> None:
     from benchviz_spark.registry import all_queries
     from benchviz_spark.session import get_spark
     from knn_recall_probe import exact_topk, recall
-    from sf3x_knn_probe import build
+    from scale_tiers import build_tiers
 
     spark = get_spark(f"knn_profile_{_KNN_PROFILE}")
-    build(spark, KNN10X, 10)
+    sf1x = build_tiers(spark, tiers=("sf1x",))["sf1x"]
     fn = all_queries()["similarity_knn_graph"]
     walls = []
     got: dict[int, set] = {}
     for _ in range(2):
         t0 = time.perf_counter()
-        g = fn(spark, KNN10X)
+        g = fn(spark, sf1x)
         rows = g.filter(f"src_id < {SAMPLE_SRC}").collect()
         walls.append(round(time.perf_counter() - t0, 2))
         got = {}
         for r in rows:
             got.setdefault(r.src_id, set()).add(r.nbr_id)
     # FULL-graph wall, bench-comparable (VERDICT r13 #5): the same
-    # noop-write evaluation bench.py and sf3x_knn_probe.py time, so
+    # noop-write evaluation bench.py and scale_tiers.py time, so
     # the profile's true cost is citable against bench_sf3x_knn.json
     # (the filtered walls above only time the 50-source evaluation).
     full_walls = []
     for _ in range(2):
         t0 = time.perf_counter()
-        fn(spark, KNN10X).write.format("noop").mode("overwrite").save()
+        fn(spark, sf1x).write.format("noop").mode("overwrite").save()
         full_walls.append(round(time.perf_counter() - t0, 2))
     con = duckdb.connect()
-    pq = os.path.join(KNN10X, "embeddings.parquet")
+    pq = os.path.join(sf1x, "embeddings.parquet")
     true_g = exact_topk(con, pq, f"a.vec_id < {SAMPLE_SRC}", K_GRAPH)
     print(
         json.dumps(
@@ -104,7 +103,7 @@ def main() -> None:
     base = results["balanced"]
     hi = results["high_recall"]
     rec["similarity_knn_graph_high_recall"] = {
-        "corpus": ".scale_probe/knn10x",
+        "corpus": ".scale_probe/sf1x",
         "sampled_sources": SAMPLE_SRC,
         "k": hi["k"],
         "recall_at_k": hi["recall_at_k"],

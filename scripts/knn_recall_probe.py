@@ -8,11 +8,14 @@ brute-force truth at the 10x tier, committed beside the timing records
 and asserted against the sf0.01 pytest bounds by the scale guard
 (tests/test_scale_guard.py::test_ann_recall_record_meets_bounds).
 
-- similarity_knn_graph on .scale_probe/knn10x (20k rotated-replica
+- similarity_knn_graph on .scale_probe/sf1x (20k rotated-replica
   vectors, the corpus of the timing record): recall@K_GRAPH over the
   sampled sources vec_id < 50 vs exact top-K_GRAPH.
-- similarity_ann_ivf_topk on .scale_probe/sf1x (the full 10x corpus):
-  recall@TOP_K over its own query set (vec_id < N_QUERIES) vs exact.
+- similarity_ann_ivf_topk on the same 10x tier: recall@TOP_K over its
+  own query set (vec_id < N_QUERIES) vs exact.
+
+The tier is built from sf0.1 by scripts/scale_tiers.py if it is missing
+or stale.
 
 Run:  SPARK_DRIVER_MEMORY=32g python scripts/knn_recall_probe.py
 (writes .benchmarks/knn_recall_sf1x.json)
@@ -27,8 +30,6 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-KNN10X = os.path.join(REPO, ".scale_probe", "knn10x")
-SF1X = os.path.join(REPO, ".scale_probe", "sf1x")
 SAMPLE_SRC = 50  # knn-graph truth sample: sources vec_id < 50
 
 # the floors the committed 10x record must meet or beat — the knn
@@ -81,44 +82,34 @@ def main() -> None:
     )
     from benchviz_spark.registry import all_queries
     from benchviz_spark.session import get_spark
-    from sf3x_knn_probe import build
+    from scale_tiers import build_tiers
 
     spark = get_spark("knn_recall_probe")
-    build(spark, KNN10X, 10)  # no-op if the timing probe already built it
-    if not os.path.isdir(os.path.join(SF1X, "embeddings.parquet")) and not os.path.isfile(
-        os.path.join(SF1X, "embeddings.parquet")
-    ):
-        raise SystemExit("run scripts/scale_probe.py first (missing sf1x corpus)")
+    sf1x = build_tiers(spark, tiers=("sf1x",))["sf1x"]
     queries = all_queries()
     con = duckdb.connect()
 
     # --- knn graph on the rotated-replica 10x corpus -----------------
-    g = queries["similarity_knn_graph"](spark, KNN10X)
+    g = queries["similarity_knn_graph"](spark, sf1x)
     got_g: dict[int, set] = {}
     for r in g.filter(f"src_id < {SAMPLE_SRC}").collect():
         got_g.setdefault(r.src_id, set()).add(r.nbr_id)
-    knn_pq = os.path.join(KNN10X, "embeddings.parquet")
-    true_g = exact_topk(con, knn_pq, f"a.vec_id < {SAMPLE_SRC}", K_GRAPH)
+    pq = os.path.join(sf1x, "embeddings.parquet")
+    true_g = exact_topk(con, pq, f"a.vec_id < {SAMPLE_SRC}", K_GRAPH)
     r_g = recall(true_g, got_g)
-    n_g = con.execute(
-        f"SELECT count(*) FROM read_parquet('{knn_pq}')"
-    ).fetchone()[0]
+    n_vectors = con.execute(f"SELECT count(*) FROM read_parquet('{pq}')").fetchone()[0]
 
     # --- IVF top-k on the full 10x corpus ----------------------------
     # truth = the registered exact query (same cosine ranking contract
     # the sf0.01 pytest bound uses), run on the same 10x corpus
-    ivf = queries["similarity_ann_ivf_topk"](spark, SF1X)
+    ivf = queries["similarity_ann_ivf_topk"](spark, sf1x)
     got_i: dict[int, set] = {}
     for r in ivf.collect():
         got_i.setdefault(r.query_id, set()).add(r.neighbor_id)
     true_i: dict[int, set] = {}
-    for r in queries["similarity_exact_topk"](spark, SF1X).collect():
+    for r in queries["similarity_exact_topk"](spark, sf1x).collect():
         true_i.setdefault(r.query_id, set()).add(r.neighbor_id)
     r_i = recall(true_i, got_i)
-    sf1x_pq = os.path.join(SF1X, "embeddings.parquet")
-    n_i = con.execute(
-        f"SELECT count(*) FROM read_parquet('{sf1x_pq}')"
-    ).fetchone()[0]
 
     rec = {
         "note": (
@@ -128,8 +119,8 @@ def main() -> None:
             "pytest floors; the scale guard asserts the record meets them."
         ),
         "similarity_knn_graph": {
-            "corpus": ".scale_probe/knn10x",
-            "n_vectors": n_g,
+            "corpus": ".scale_probe/sf1x",
+            "n_vectors": n_vectors,
             "sampled_sources": SAMPLE_SRC,
             "recall_at_k": r_g,
             "k": K_GRAPH,
@@ -137,7 +128,7 @@ def main() -> None:
         },
         "similarity_ann_ivf_topk": {
             "corpus": ".scale_probe/sf1x",
-            "n_vectors": n_i,
+            "n_vectors": n_vectors,
             "sampled_sources": N_QUERIES,
             "recall_at_k": r_i,
             "k": TOP_K,

@@ -8,8 +8,6 @@ from __future__ import annotations
 
 import contextlib
 import io
-import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -575,12 +573,9 @@ def test_serving_listing_window_is_catalog_bounded(spark):
 def _cached_demo_fact(spark):
     """The demo tree's fact table, cached and materialized, as
     run_pipeline serves from it."""
-    from benchviz_spark.pipeline import _write_demo_tree
-    from benchviz_spark.sources.bench_logs import build_fact_table
+    from benchviz_spark.pipeline import _DEMO_TREE, _tree_fact
 
-    root = os.path.join(tempfile.gettempdir(), "benchviz_demo_tree")
-    _write_demo_tree(root)
-    fact = build_fact_table(spark, root).cache()
+    fact = _tree_fact(spark, "demo", _DEMO_TREE).cache()
     fact.count()
     return fact
 

@@ -49,8 +49,8 @@ def test_sf1x_record_covers_every_benched_query():
     sf1x, sf01 = _load()
     missing = sorted(set(sf01) - set(sf1x["queries"]))
     assert not missing, (
-        f"queries with no 10x timing (run scripts/scale_probe.py and "
-        f"merge into {SF1X}): {missing}"
+        f"queries with no 10x timing (run scripts/scale_tiers.py --sf1x "
+        f"NAME..., which merges into {SF1X}): {missing}"
     )
 
 
@@ -197,8 +197,8 @@ def test_incremental_admission_cost_is_batch_driven():
     # fixed-batch probes above bound how the admit share scales.
     split = rec["split_sf1x"]
     assert split is not None, (
-        "split_sf1x missing: run scripts/scale_probe.py (builds "
-        ".scale_probe/sf1x) then scripts/incremental_admission_probe.py"
+        "split_sf1x missing: run scripts/incremental_admission_probe.py "
+        "(it builds .scale_probe/sf1x with scripts/scale_tiers.py)"
     )
     assert split["build_sec"] > 0 and split["admit_sec"] > 0, split
     assert split["admitted_rows"] > 0, split
