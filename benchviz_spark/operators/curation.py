@@ -1097,7 +1097,7 @@ def curation_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _admission_gate_ctes(within_batch_rn: bool) -> str:
+def _admission_gate_ctes(within_batch_exact: bool) -> str:
     """The CTE chain shared by the incremental-admission oracles: the
     hygiene gates (eval carve + length + contamination — identical SQL
     to ``_CURATION_ORACLE``'s, under g-prefixed CTE names so they
@@ -1106,13 +1106,13 @@ def _admission_gate_ctes(within_batch_rn: bool) -> str:
     dedup vs the epoch-0 survivors, and the MinHash-LSH +
     exact-Jaccard near-dup tier against them (``_minhash_ctes``
     replayed verbatim), ending at ``b3`` — the batch docs admitted
-    versus the STANDING corpus. ``within_batch_rn`` adds the
+    versus the STANDING corpus. ``within_batch_exact`` adds the
     lowest-doc_id-wins exact dedup WITHIN the batch (the full
     incremental semantics); the streaming admission gate is a
     per-document decision, so its oracle omits it."""
     from benchviz_spark.operators.dedup import _INCR_SEEN_RE, _minhash_ctes
 
-    if within_batch_rn:
+    if within_batch_exact:
         b2 = """b2 AS (
       SELECT doc_id, lang, source, n_chars FROM (
         SELECT *, row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rn
@@ -1222,7 +1222,7 @@ def _incremental_oracle() -> str:
     cross-engine-exact argument as the minhash oracle."""
     return f"""
     WITH RECURSIVE
-    {_admission_gate_ctes(within_batch_rn=True)},
+    {_admission_gate_ctes(within_batch_exact=True)},
     pairs_nn AS (
       SELECT c.left_id, c.right_id
       FROM (
@@ -1270,7 +1270,7 @@ def _admission_delta_oracle() -> str:
     document. Split assignment is the standard per-row hash."""
     return f"""
     WITH
-    {_admission_gate_ctes(within_batch_rn=False)}
+    {_admission_gate_ctes(within_batch_exact=False)}
     SELECT doc_id, lang, source, n_chars,
            CASE WHEN bucket < {TRAIN_UPTO} THEN 'train'
                 WHEN bucket < {VAL_UPTO} THEN 'val'
@@ -1328,10 +1328,11 @@ def curation_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the in-session form of the ONE admission path: the five
     standing relations are built in memory (``standing_in_memory``,
     the same definitions ``build_admission_index`` writes to the
-    catalog) and the batch is admitted against them by the same tier
-    function ``incremental_batch_indexed`` runs over the durable
-    index. Nothing touches the catalog, and every relation is scratch
-    persisted, so bench.py's per-row clear_caches() drops it all."""
+    catalog) and the batch is admitted against them by the same
+    ``_admit_incremental`` that ``incremental_batch_indexed`` runs over
+    the durable index. Nothing touches the catalog, and every
+    materialized relation is enrolled in the admission scratch, so
+    bench.py's per-row clear_caches() drops it all."""
     standing = standing_in_memory(spark, sf_dir)
     return _admit_incremental(spark, sf_dir, standing, f"{sf_dir}|in-memory")
 
@@ -1344,11 +1345,15 @@ def curation_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # - durable: ``build_admission_index`` writes them as bucketed catalog
 #   tables once per standing-corpus epoch, after which every ingest's
 #   cost is sized by the batch alone (``admission_tables`` reads them);
-# - in memory: ``standing_in_memory`` persists the same relations as
-#   query scratch, for the in-session ``curation_incremental_batch``.
+# - in memory: ``standing_in_memory`` holds the same relations as
+#   local checkpoints, for the in-session ``curation_incremental_batch``.
+#
+# Every admission reads them through ONE per-document decision,
+# ``admit_vs_standing``:
 #
 #   eval_grams  distinct eval-split n-grams (decontam's standing asset;
-#               broadcast side of the batch contamination join)
+#               collected at plan time into the broadcast blocklist of
+#               the decision's contamination count)
 #   fps         standing curated (doc_id, fp), bucketed by fp
 #               (exact-tier anti-join side: only the bloom-positive
 #               batch rows shuffle, the corpus side is read co-located)
@@ -1359,7 +1364,7 @@ def curation_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 #               (exact-Jaccard verification side, read only for
 #               band-colliding old_ids)
 #   bloom       the ~8 KiB bloom bitset over standing fps, one row,
-#               broadcast per ingest
+#               collected at plan time into a literal map column
 #
 # Bucketing follows serving/lake.py's proven saveAsTable pattern
 # (Spark honors bucket metadata only through the catalog).
@@ -1380,20 +1385,21 @@ _ADMISSION_BUCKETS = {
 # Registered with the session cache registry: bench.py's clear_caches()
 # still forces a cold build per timed row, and a build for the SAME
 # prefix over a DIFFERENT sf_dir replaces the entry (the catalog tables
-# were just overwritten, so the old memo must die with them).
+# were just overwritten, so the old memo must die with them). A hit
+# also requires every table to still be in the catalog: a dropped one
+# forces a rebuild instead of a failing read.
 _INDEX_MEMO: dict = register_cache({})
 
-# Query-internal materialization points of the admission paths (r15
-# optimization): the gated batch, the exact-tier survivors, and the
-# batch band/shingle relations are each consumed by SEVERAL downstream
-# joins, and without a persist Catalyst expands every consumer into its
-# own copy of the whole gate chain (the committed before-plan shows the
-# batch documents scan 20x in one query). All are BATCH-sized (the
-# docstrings' scale argument), persisted MEMORY_AND_DISK inside the
-# timed query, and enrolled here so bench.py's per-row clear_caches()
-# unpersists them — nothing survives into the next timed row. The
-# in-memory standing relations (local checkpoints, see
-# ``standing_in_memory``) are enrolled here too.
+# Query-internal materialization points of incremental admission: the
+# probed batch and its survivor set are each consumed by SEVERAL
+# downstream joins (and the survivors by every round of the component
+# loop), and without a persist Catalyst expands every consumer into its
+# own copy of the decision. Both are BATCH-sized (the docstrings' scale
+# argument), persisted MEMORY_AND_DISK inside the timed query, and
+# enrolled here so bench.py's per-row clear_caches() unpersists them —
+# nothing survives into the next timed row. The per-document decision
+# alone persists nothing. The in-memory standing relations (local
+# checkpoints, see ``standing_in_memory``) are enrolled here too.
 _ADMIT_SCRATCH: dict = register_cache({})
 
 
@@ -1455,15 +1461,22 @@ def _standing_eval_grams(sh_all: DataFrame) -> DataFrame:
     )
 
 
-def _hygiene_gated(docs: DataFrame, sh4: DataFrame, ev: DataFrame) -> DataFrame:
-    """``docs`` passing the curation hygiene gates — eval carve, length,
-    contamination of their (doc_id, shingles) n-grams ``sh4`` against
-    the broadcast eval-gram set ``ev`` (same rounding as
-    decontam_eval_overlap, so the flag boundary is bit-identical) —
-    with their text fingerprint. One gate definition for the standing
-    corpus and every batch."""
+def _standing_fps(
+    docs: DataFrame, sh_all: DataFrame, ev: DataFrame
+) -> DataFrame:
+    """Standing curated survivors (doc_id, fp): the epoch-0 sources
+    passing the curation hygiene gates — eval carve, length,
+    contamination of their n-grams against the broadcast eval-gram set
+    ``ev`` (same rounding as decontam_eval_overlap, so the flag
+    boundary is bit-identical) — then exact dedup with the lowest
+    doc_id per fingerprint winning. A batch is gated inside
+    ``admit_vs_standing`` instead."""
+    from benchviz_spark.operators.dedup import _INCR_SEEN_RE
+
     flagged = (
-        sh4.filter(F.size("shingles") > 0)
+        sh_all.filter(~eval_split(F.col("doc_id")))
+        .select("doc_id", F.col("s4").alias("shingles"))
+        .filter(F.size("shingles") > 0)
         .select(
             "doc_id",
             F.size("shingles").cast("long").alias("n_shingles"),
@@ -1478,32 +1491,15 @@ def _hygiene_gated(docs: DataFrame, sh4: DataFrame, ev: DataFrame) -> DataFrame:
         )
         .select("doc_id")
     )
+    rn = F.row_number().over(W.partitionBy("fp").orderBy("doc_id"))
     return (
-        docs.filter(
+        docs.filter(F.col("source").rlike(_INCR_SEEN_RE))
+        .filter(
             (~eval_split(F.col("doc_id"))) & (F.col("n_chars") >= MIN_CHARS)
         )
         .join(flagged, "doc_id", "left_anti")
         .withColumn("fp", F.md5(_norm_text(F.col("text"))))
-    )
-
-
-def _standing_fps(
-    docs: DataFrame, sh_all: DataFrame, ev: DataFrame
-) -> DataFrame:
-    """Standing curated survivors (doc_id, fp): the hygiene gates over
-    the epoch-0 sources, then exact dedup with the lowest doc_id per
-    fingerprint winning."""
-    from benchviz_spark.operators.dedup import _INCR_SEEN_RE
-
-    sh4 = sh_all.filter(~eval_split(F.col("doc_id"))).select(
-        "doc_id", F.col("s4").alias("shingles")
-    )
-    gated = _hygiene_gated(
-        docs.filter(F.col("source").rlike(_INCR_SEEN_RE)), sh4, ev
-    )
-    rn = F.row_number().over(W.partitionBy("fp").orderBy("doc_id"))
-    return (
-        gated.withColumn("rn", rn)
+        .withColumn("rn", rn)
         .filter(F.col("rn") == 1)
         .select("doc_id", "fp")
     )
@@ -1530,35 +1526,38 @@ def _standing_relations(
 
     docs = load_table(spark, sf_dir, "documents")
     sh_all = _standing_token_pass(spark, docs).persist()
-    sh_all.count()
-    ev = _standing_eval_grams(sh_all)
-    with subtree_pool(3) as pool:
-        f_ev = pool.submit(store, "eval_grams", ev)
-        fps = pool.submit(
-            lambda: store("fps", _standing_fps(docs, sh_all, ev))
-        ).result()
-        # bands/shingles read the shared pass semi-joined to the
-        # survivors, so they start the moment fps lands
-        sh3 = sh_all.join(fps.select("doc_id"), "doc_id", "left_semi").select(
-            "doc_id", F.col("s3").alias("shingles")
-        )
-        futs = {
-            "bands": pool.submit(
-                lambda: store("bands", band_buckets(spark, sf_dir, sh=sh3))
-            ),
-            "shingles": pool.submit(lambda: store("shingles", hash_shingles(sh3))),
-            "bloom": pool.submit(
-                lambda: store(
-                    "bloom",
-                    bloom_bitmap(fps.select(F.xxhash64("fp").alias("pk")), "pk"),
-                )
-            ),
-            "eval_grams": f_ev,
-        }
-        out = {"fps": fps, **{part: f.result() for part, f in futs.items()}}
-    sh_all.unpersist()
-    spark.sparkContext.setJobDescription(None)
-    return out
+    try:
+        sh_all.count()
+        ev = _standing_eval_grams(sh_all)
+        with subtree_pool(3) as pool:
+            f_ev = pool.submit(store, "eval_grams", ev)
+            fps = pool.submit(
+                lambda: store("fps", _standing_fps(docs, sh_all, ev))
+            ).result()
+            # bands/shingles read the shared pass semi-joined to the
+            # survivors, so they start the moment fps lands
+            sh3 = sh_all.join(fps.select("doc_id"), "doc_id", "left_semi").select(
+                "doc_id", F.col("s3").alias("shingles")
+            )
+            futs = {
+                "bands": pool.submit(
+                    lambda: store("bands", band_buckets(spark, sf_dir, sh=sh3))
+                ),
+                "shingles": pool.submit(lambda: store("shingles", hash_shingles(sh3))),
+                "bloom": pool.submit(
+                    lambda: store(
+                        "bloom",
+                        bloom_bitmap(fps.select(F.xxhash64("fp").alias("pk")), "pk"),
+                    )
+                ),
+                "eval_grams": f_ev,
+            }
+            return {"fps": fps, **{part: f.result() for part, f in futs.items()}}
+    finally:
+        # not enrolled in any cache, so a raising store would otherwise
+        # leave the pass pinned out of clear_caches()' reach
+        sh_all.unpersist()
+        spark.sparkContext.setJobDescription(None)
 
 
 def standing_in_memory(
@@ -1597,7 +1596,11 @@ def build_admission_index(
     names = admission_index_names(prefix)
     memo_key = (spark.sparkContext.applicationId, prefix)
     hit = _INDEX_MEMO.get(memo_key)
-    if hit is not None and hit["sf_dir"] == sf_dir:
+    if (
+        hit is not None
+        and hit["sf_dir"] == sf_dir
+        and all(spark.catalog.tableExists(n) for n in names.values())
+    ):
         return hit["names"]
     warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
     for name in names.values():
@@ -1617,141 +1620,196 @@ def build_admission_index(
     return names
 
 
-def _indexed_admit_vs_standing(
-    spark: SparkSession,
-    sf_dir: str,
-    standing: dict[str, DataFrame],
-    tag: str,
-    within_batch_rn: bool = True,
-    docs: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Steps (1)-(3) of admission against the ``standing`` relations
-    (durable tables or in memory) — hygiene gates, exact tier vs the
-    standing fingerprints, near-dup tier vs the standing band postings
-    — shared by the full incremental admission and the per-document
-    admission delta. Returns (b3, bands_batch, sh_batch) so the full
-    path can run its within-batch step (4) on the same batch-sized
-    relations. ``tag`` names this standing source in the scratch keys.
-    ``within_batch_rn=False`` skips the lowest-doc_id-wins exact dedup
-    WITHIN the batch: the per-document decision the streaming gate
-    mirrors. ``docs`` overrides the table scan with an already-
-    materialized documents relation — the foreachBatch admission sink
-    hands each MICRO-BATCH through here, so one decision function
-    serves batch, drain, and production stream."""
+def admit_vs_standing(
+    spark: SparkSession, docs: DataFrame, standing: dict[str, DataFrame]
+) -> tuple[DataFrame, DataFrame]:
+    """THE per-document admission decision, run by the batch delta, the
+    foreachBatch sink, the drained stream gate and incremental
+    admission: each incoming-source row of ``docs`` (a batch, a
+    micro-batch or a stream) admitted or dropped on its own content
+    against the frozen ``standing`` relations (durable tables or in
+    memory). Returns (admitted, probed): admitted is (doc_id, lang,
+    source, n_chars); probed is the gated rows with their probe columns
+    (fp, hs, n_shingles, n_contaminated, buckets).
+
+    - hygiene: eval carve + length filters; one mapInPandas pass counts
+      contamination against the eval-gram set and computes the band
+      keys (``dedup._band_keys_vec``). The ratio flag is Catalyst
+      F.round (HALF_UP, as the oracle), inside when(n_shingles > 0):
+      ANSI mode raises on /0 and a guard conjunct does not protect a
+      sibling conjunct.
+    - exact tier: the ~8 KiB Bloom bitset, a constant of the epoch,
+      ships as a literal map column; only bloom-positive rows reach the
+      anti join against the standing fingerprints.
+    - near-dup tier: posexplode_outer the band keys (outer: a
+      shingle-less document has no bands and stays admitted), left-join
+      the (band, bucket) postings and the shingle store, verify by
+      exact Jaccard.
+    - verdict: groupBy(doc) max(verified). Candidates are not deduped
+      across bands first: the max makes duplicates harmless, and
+      everything before the aggregation stays stateless on a stream."""
+    from benchviz_spark.operators.decontam import _seg_member_counts
     from benchviz_spark.operators.dedup import (
         _INCR_SEEN_RE,
-        band_buckets,
-        hash_shingles,
-        shingled_documents,
-        verified_band_pairs,
+        _band_keys_vec,
+        _shingles,
+        jaccard_of,
     )
     from benchviz_spark.operators.relational_ext import bloom_might_contain
 
-    from benchviz_spark.sources.tables import spread
-
-    if docs is None:
-        docs = load_table(spark, sf_dir, "documents")
-    # spread() the batch once for every probe-side chain below: the
-    # gate shingles, the band buckets and the hashed shingle store all
-    # run heavy per-row work directly on this relation, and a one-split
-    # local scan would serialize each of them onto a single task (the
-    # standing side spreads its token pass for the same reason).
-    # No-op on a many-split production micro-batch.
-    batch_docs = spread(
-        spark, docs.filter(~F.col("source").rlike(_INCR_SEEN_RE))
+    bc = spark.sparkContext.broadcast(
+        frozenset(r.g for r in standing["eval_grams"].collect())
+    )
+    bloom_map = standing["bloom"].collect()[0]["bloom"]
+    # Build the literal map in ONE py4j call: F.lit over a 1024-element
+    # Python list serializes element-by-element, profiled at ~1 s of
+    # the ~2.1 s steady-state plan build (OPTIMIZATION_r16.md). A SQL
+    # literal string parses JVM-side in milliseconds and constant-folds
+    # to the identical map<int,bigint>.
+    keys = sorted(bloom_map)
+    bloom_lit = F.expr(
+        "map_from_arrays(array({}), array({}))".format(
+            ",".join(str(int(k)) for k in keys),
+            ",".join(f"{int(bloom_map[k])}L" for k in keys),
+        )
     )
 
-    # (1) hygiene gates, batch-sized: the batch's grams join the
-    # broadcast standing eval-gram set.
-    sh4 = shingled_documents(spark, sf_dir, n=NGRAM, docs=batch_docs)
-    batch = _hygiene_gated(batch_docs, sh4, standing["eval_grams"])
-    # The gated batch feeds both bloom-probe arms (and through them
-    # every later tier): project to the five columns the tiers read
-    # (guide §2.3 — text never crosses another exchange) and persist,
-    # so the gate chain executes once per query instead of once per
-    # consumer copy.
-    tag = f"{tag}|{within_batch_rn}|{docs is not None}"
-    batch = _admit_scratch(
-        spark, f"{tag}|batch",
-        batch.select("doc_id", "lang", "source", "n_chars", "fp"),
+    toks = F.split(_norm_text(F.col("text")), " ")
+    # Unconditional repartition to cluster parallelism BEFORE the heavy
+    # projection: the shingling expressions and probe() below are the
+    # compute wall, and a single-file input arrives as ONE partition.
+    # Not tables.spread: on a stream its .rdd probe raises and the
+    # input would pass through unchanged, onto one core.
+    gated = (
+        docs.filter(~F.col("source").rlike(_INCR_SEEN_RE))
+        .filter(
+            (~eval_split(F.col("doc_id"))) & (F.col("n_chars") >= MIN_CHARS)
+        )
+        .repartition(spark.sparkContext.defaultParallelism)
+        .select(
+            "doc_id",
+            "lang",
+            "source",
+            "n_chars",
+            F.md5(_norm_text(F.col("text"))).alias("fp"),
+            _shingles(toks, NGRAM).alias("g4"),
+            _shingles(toks, 3).alias("g3"),
+            F.array_distinct(
+                F.transform(_shingles(toks, 3), lambda s: F.xxhash64(s))
+            ).alias("hs"),
+        )
     )
 
-    # (2) exact tier: broadcast the standing bloom bitset; only
-    # bloom-positive rows reach the anti join against the standing
-    # fingerprints (fp-bucketed in the durable form: corpus side
-    # co-located, batch side shuffles).
-    probed = batch.crossJoin(F.broadcast(standing["bloom"])).withColumn(
-        "maybe_seen", bloom_might_contain(F.xxhash64("fp"))
+    def probe(batches):
+        import pandas as pd
+
+        ev = bc.value
+        for pdf in batches:
+            n_sh, n_cont = _seg_member_counts(pdf["g4"], ev)
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"],
+                    "lang": pdf["lang"],
+                    "source": pdf["source"],
+                    "n_chars": pdf["n_chars"],
+                    "fp": pdf["fp"],
+                    "hs": pdf["hs"],
+                    "n_shingles": n_sh,
+                    "n_contaminated": n_cont,
+                    "buckets": _band_keys_vec(pdf["g3"]),
+                }
+            )
+
+    probed = gated.mapInPandas(
+        probe,
+        "doc_id long, lang string, source string, n_chars long, fp string,"
+        " hs array<long>, n_shingles long, n_contaminated long,"
+        " buckets array<string>",
+    )
+
+    contaminated = F.when(
+        F.col("n_shingles") > 0,
+        F.round(F.col("n_contaminated") / F.col("n_shingles"), 6)
+        >= THRESHOLD,
+    ).otherwise(F.lit(False))
+    flagged = (
+        probed.filter(~contaminated)
+        .withColumn("bloom", bloom_lit)
+        .withColumn("maybe_seen", bloom_might_contain(F.xxhash64("fp")))
+        .drop("bloom")
     )
     old_fps = standing["fps"].select("fp")
-    new_vs_old = probed.filter(~F.col("maybe_seen")).unionByName(
-        probed.filter(F.col("maybe_seen")).join(old_fps, "fp", "left_anti")
-    )
-    if within_batch_rn:
-        rn = F.row_number().over(W.partitionBy("fp").orderBy("doc_id"))
-        new_vs_old = new_vs_old.withColumn("rn", rn).filter(F.col("rn") == 1)
-    # b2 feeds the near-dup semi join AND the final anti join (and the
-    # full path's within-batch tier on top) — persist the batch-sized
-    # survivor set once.
-    b2 = _admit_scratch(
-        spark, f"{tag}|b2",
-        new_vs_old.select("doc_id", "lang", "source", "n_chars"),
+    new_vs_old = flagged.filter(~F.col("maybe_seen")).unionByName(
+        flagged.filter(F.col("maybe_seen")).join(old_fps, "fp", "left_anti")
     )
 
-    # (3) near-dup tier vs the standing corpus: batch bands (batch-
-    # sized minhash) equi-join the standing (band, bucket) postings;
-    # candidates verify by exact Jaccard against the standing shingle
-    # store — only band-colliding old_ids are ever read.
-    # Both batch relations are re-read by the full path's within-batch
-    # tier; persisted batch-sized, cleared per bench row. ONE n=3 batch
-    # shingle pass (persisted) feeds both the minhash bands and the
-    # hashed verification shingles — r15: each previously re-ran the
-    # normalize+split+shingle chain over the batch.
-    sh3_batch = _admit_scratch(
-        spark,
-        f"{tag}|sh3",
-        shingled_documents(spark, sf_dir, docs=batch_docs),
+    exploded = new_vs_old.select(
+        "doc_id",
+        "lang",
+        "source",
+        "n_chars",
+        "hs",
+        F.posexplode_outer("buckets").alias("band", "bucket"),
     )
-    bands_batch = _admit_scratch(
-        spark, f"{tag}|bands", band_buckets(spark, sf_dir, sh=sh3_batch)
+    old_b = standing["bands"].select(
+        F.col("doc_id").alias("old_id"), "band", "bucket"
     )
-    sh_batch = _admit_scratch(spark, f"{tag}|sh", hash_shingles(sh3_batch))
-    drop_vs_old = (
-        verified_band_pairs(
-            bands_batch.join(b2.select("doc_id"), "doc_id", "left_semi"),
-            standing["bands"],
-            sh_batch,
-            standing["shingles"],
-        )
-        .select(F.col("left_id").alias("doc_id"))
-        .distinct()
+    old_sh = standing["shingles"].select(
+        F.col("doc_id").alias("old_id"), F.col("hs").alias("sb")
     )
-    b3 = b2.join(drop_vs_old, "doc_id", "left_anti")
-    return b3, bands_batch, sh_batch
+    cand = exploded.join(old_b, ["band", "bucket"], "left_outer").join(
+        old_sh, "old_id", "left_outer"
+    )
+    verified = F.coalesce(jaccard_of("hs", "sb") >= 0.5, F.lit(False))
+    admitted = (
+        cand.groupBy("doc_id", "lang", "source", "n_chars")
+        .agg(F.max(verified).alias("dropped"))
+        .filter(~F.col("dropped"))
+        .drop("dropped")
+    )
+    return admitted, probed
 
 
 def _admit_incremental(
     spark: SparkSession, sf_dir: str, standing: dict[str, DataFrame], tag: str
 ) -> DataFrame:
-    """The full incremental admission against ``standing``: tiers
-    (1)-(3) of ``_indexed_admit_vs_standing``, then (4) within-batch
-    near-dups — the verified batch-batch pair graph through min-label
-    components, cluster minimum survives. Every per-ingest relation is
-    batch-sized; the min-label loop never touches the standing corpus."""
+    """The full incremental admission against ``standing``: the
+    per-document decision (``admit_vs_standing``), then the within-batch
+    tiers over its survivors — lowest doc_id per fingerprint, then
+    near-dups through min-label components over the verified
+    batch-batch pair graph, cluster minimum survives. The exact filter
+    may follow the decision because every vs-standing tier keeps or
+    drops a whole fingerprint class (equal fp means equal normalized
+    text, so equal shingles and bands). Every per-ingest relation is
+    batch-sized; the min-label loop never touches the standing
+    corpus."""
     from benchviz_spark.operators.dedup import (
         min_label_components,
         verified_band_pairs,
     )
 
-    b3, bands_batch, sh_batch = _indexed_admit_vs_standing(
-        spark, sf_dir, standing, tag, within_batch_rn=True
+    admitted, probed = admit_vs_standing(
+        spark, load_table(spark, sf_dir, "documents"), standing
     )
-    # b3 is consumed three times below (band semi join, component
+    # Persisting after the decision is defined still serves it (Spark
+    # substitutes cached plans when a query executes), so the decision
+    # and the survivor lookup below share one probe pass.
+    probed = _admit_scratch(spark, f"{tag}|probed", probed)
+    rn = F.row_number().over(W.partitionBy("fp").orderBy("doc_id"))
+    # b3 is consumed four times below (bands, shingles, component
     # universe, final survivor semi join) — persist the batch-sized
     # survivor set so the vs-standing tiers run once.
-    b3 = _admit_scratch(spark, f"{tag}|b3full", b3)
-    b3_b = bands_batch.join(b3.select("doc_id"), "doc_id", "left_semi")
-    pairs_nn = verified_band_pairs(b3_b, b3_b, sh_batch, sh_batch, ordered=True)
+    b3 = _admit_scratch(
+        spark,
+        f"{tag}|b3full",
+        probed.join(admitted.select("doc_id"), "doc_id", "left_semi")
+        .withColumn("rn", rn)
+        .filter(F.col("rn") == 1)
+        .select("doc_id", "lang", "source", "n_chars", "hs", "buckets"),
+    )
+    b3_b = b3.select("doc_id", F.posexplode("buckets").alias("band", "bucket"))
+    sh = b3.select("doc_id", "hs")
+    pairs_nn = verified_band_pairs(b3_b, b3_b, sh, sh, ordered=True)
     comp = min_label_components(spark, pairs_nn, b3.select("doc_id"))
     minima = comp.filter(F.col("doc_id") == F.col("cluster_id")).select("doc_id")
     return _with_split(b3.join(minima, "doc_id", "left_semi"))
@@ -1762,28 +1820,21 @@ def admission_delta_indexed(
 ) -> DataFrame:
     """The PER-DOCUMENT admission delta against the durable index:
     every batch document admitted or dropped on its own content versus
-    the frozen standing corpus — no within-batch tiers. This is the
-    decision surface a streaming ingest gate evaluates per arriving
-    document (streaming/windows.py stream_dedup_admission is the
-    stream twin; both hash against ``_admission_delta_oracle``), and
-    the batch form of 'the epoch index is the single admission source
-    of truth'."""
-    b3, _, _ = _indexed_admit_vs_standing(
-        spark,
-        sf_dir,
-        admission_tables(spark, prefix),
-        f"{sf_dir}|{prefix}",
-        within_batch_rn=False,
+    the frozen standing corpus — no within-batch tiers. The batch form
+    of the decision ``stream_dedup_admission`` runs on the document
+    stream (both hash against ``_admission_delta_oracle``)."""
+    admitted, _ = admit_vs_standing(
+        spark, load_table(spark, sf_dir, "documents"), admission_tables(spark, prefix)
     )
-    return _with_split(b3)
+    return _with_split(admitted)
 
 
 def incremental_batch_indexed(
     spark: SparkSession, sf_dir: str, prefix: str = "admission"
 ) -> DataFrame:
     """``curation_incremental_batch`` against the DURABLE index tables
-    instead of in-memory standing relations: the same tier function,
-    so the same admission semantics (equivalence pinned in
+    instead of in-memory standing relations: the same
+    ``_admit_incremental``, so the same admission semantics (equivalence pinned in
     tests/test_curation.py and by the shared golden oracle). The only
     corpus-sized reads are the bucketed index tables, which join
     WITHOUT moving: the batch side shuffles to the index's bucketing,

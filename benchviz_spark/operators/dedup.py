@@ -83,8 +83,8 @@ def jaccard_of(sa: str | Column, sb: str | Column) -> Column:
     load-bearing verification boundary every near-dup tier shares (the
     >= 0.5 cut). One definition so the rounding and the
     intersection/union arithmetic can never drift between the pair
-    detectors, the incremental-admission tiers, and the streaming gate
-    (their DuckDB oracles spell out the same formula)."""
+    detectors and the admission tiers (their DuckDB oracles spell out
+    the same formula)."""
     inter = F.size(F.array_intersect(sa, sb))
     return F.round(
         inter / (F.size(sa) + F.size(sb) - inter).cast("double"), 6
@@ -101,8 +101,8 @@ def verified_band_pairs(
     """(left_id, right_id): documents that share a (band, bucket) LSH
     posting (``band_buckets`` rows on each side) AND whose hashed
     shingle sets (``hash_shingles`` rows) reach exact Jaccard >= 0.5 —
-    the band-join -> verification step of every admission near-dup
-    tier, vs the standing corpus and within the batch alike.
+    the band-join -> verification step of incremental admission's
+    within-batch near-dup tier.
     Candidates are deduped across bands before the two shingle joins,
     so each pair is verified once. ``ordered`` keeps left_id < right_id
     for a self-join of one side, so each unordered pair appears once."""
@@ -135,9 +135,9 @@ def shingled_documents(
     """documents -> (doc_id, shingles array<string>). Narrow (no shuffle).
 
     ``docs`` overrides the table scan with a pre-filtered relation —
-    the incremental-admission path shingles ONLY the incoming batch
-    this way (a semi join after the fact would still shingle the whole
-    lake; a filter pushed below the projection is batch-sized work)."""
+    decontam's span excision shingles ONLY the eval carve this way (a
+    semi join after the fact would still shingle the whole lake; a
+    filter pushed below the projection is carve-sized work)."""
     if docs is None:
         docs = load_table(spark, sf_dir, "documents")
     toks = F.split(_norm_text(F.col("text")), " ")
@@ -428,6 +428,50 @@ def band_buckets(
     return sig.select(
         "doc_id", F.explode(F.array(*bands)).alias("bb")
     ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+
+
+def _band_keys_vec(col) -> list[list[str]]:
+    """Per-row ``band_buckets`` keys for a pandas column of shingle
+    lists (element i = the bucket of band i; none for a shingle-less
+    row), for Python workers. Vectorized over the flattened batch: one
+    md5 per UNIQUE shingle, the 32 affine hashes as one int64 matrix op
+    (operands stay < 2^62, exact), per-row minima via reduceat."""
+    import hashlib
+
+    import numpy as np
+
+    p = _MERSENNE31
+    a_arr = np.array([a for a, _ in _HASH_PARAMS], dtype=np.int64).reshape(-1, 1)
+    b_arr = np.array([b for _, b in _HASH_PARAMS], dtype=np.int64).reshape(-1, 1)
+    lens = np.fromiter((len(v) for v in col), dtype=np.int64, count=len(col))
+    out = [[] for _ in range(len(lens))]
+    if int(lens.sum()) == 0:
+        return out
+    flat = [s for v in col for s in v]
+    uniq, inv = np.unique(np.asarray(flat, dtype=object), return_inverse=True)
+    ubase = np.fromiter(
+        (
+            int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16) % p
+            for s in uniq
+        ),
+        dtype=np.int64,
+        count=len(uniq),
+    )
+    bases = ubase[inv]
+    vals = (a_arr * bases[None, :] + b_arr) % p
+    ends = np.cumsum(lens)
+    nonzero = np.nonzero(lens)[0]
+    starts = (ends - lens)[nonzero]
+    mins = np.minimum.reduceat(vals, starts, axis=1)
+    for j, i in enumerate(nonzero):
+        m = mins[:, j]
+        out[i] = [
+            "_".join(
+                str(int(m[bi * ROWS_PER_BAND + r])) for r in range(ROWS_PER_BAND)
+            )
+            for bi in range(N_BANDS)
+        ]
+    return out
 
 
 def minhash_candidates(

@@ -129,28 +129,27 @@ def run_admission_stream(
     """The PRODUCTION admission topology: per-micro-batch ingest against
     the durable standing-corpus index with ZERO streaming state.
 
-    The per-document admission decision (curation.admission_delta_
-    indexed semantics: hygiene gates, Bloom/fp exact tier, band-posting
-    near-dup tier — all vs the frozen epoch index) is batch-computable,
-    so ``foreachBatch`` hands each micro-batch to the SAME decision
-    function the batch path uses and appends the admitted delta to an
-    exactly-once batch-partitioned parquet sink. Unlike the drained
-    complete-mode gate (streaming/windows.py stream_dedup_admission,
-    whose groupBy state grows with the drained stream — fine for the
-    finite correctness drain, wrong for an unbounded production
-    stream), this topology carries NO state store at all: the decision
-    needs no cross-batch memory because each document is judged on its
-    own content against the index, and the checkpoint's file tracking
-    alone provides restart safety. One decision function, three
-    consumers — batch query, finite drain, unbounded stream.
+    The per-document admission decision (curation.admit_vs_standing:
+    hygiene gates, Bloom/fp exact tier, band-posting near-dup tier —
+    all vs the frozen epoch index) is batch-computable, so
+    ``foreachBatch`` hands each micro-batch to it and appends the
+    admitted delta to an exactly-once batch-partitioned parquet sink.
+    The drained gate (streaming/windows.py stream_dedup_admission)
+    runs the same decision on the stream itself, where its final
+    per-document aggregation keeps state that grows with the drained
+    stream — fine for the finite correctness drain, wrong for an
+    unbounded production stream. Here the aggregation runs inside each
+    micro-batch, so the topology carries NO state store at all: each
+    document is judged on its own content against the index, and the
+    checkpoint's file tracking alone provides restart safety.
 
     The index must exist (curation.build_admission_index) — raising
     early beats admitting against an empty standing corpus."""
     from benchviz_spark.operators.curation import (
-        _indexed_admit_vs_standing,
         _with_split,
         admission_index_names,
         admission_tables,
+        admit_vs_standing,
     )
     from benchviz_spark.streaming.windows import read_documents_stream
 
@@ -167,15 +166,10 @@ def run_admission_stream(
 
     def admit(batch_df: DataFrame, batch_id: int) -> None:
         # exactly-once per batch: overwrite this batch's own partition
-        b3, _, _ = _indexed_admit_vs_standing(
-            spark,
-            sf_dir,
-            admission_tables(spark, prefix),
-            f"{sf_dir}|{prefix}",
-            within_batch_rn=False,
-            docs=batch_df,
+        admitted, _ = admit_vs_standing(
+            spark, batch_df, admission_tables(spark, prefix)
         )
-        _with_split(b3).write.mode("overwrite").parquet(
+        _with_split(admitted).write.mode("overwrite").parquet(
             os.path.join(out_dir, f"batch={batch_id}")
         )
 

@@ -275,15 +275,15 @@ def stream_decontam_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_dedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document dedup admission running ON THE STREAM against the
     DURABLE standing-corpus index (curation.build_admission_index):
-    arriving documents pass the hygiene gates, probe the persisted
-    Bloom bitset + fingerprint store (exact tier) and the persisted
-    (band, bucket) postings + shingle store (near-dup tier), and emit
-    the admitted delta — the epoch index as the single admission
-    source of truth across batch and stream (VERDICT r14 #5). Drained
+    the document stream through the ONE admission decision
+    (curation.admit_vs_standing) that the batch twin
+    curation_admission_delta runs over the documents table — hygiene
+    gates, the Bloom bitset + fingerprint store (exact tier), the
+    (band, bucket) postings + shingle store (near-dup tier). Drained
     in complete mode (the per-doc verdict is an aggregation; every
     doc_id arrives exactly once, so complete == the admitted set) and
-    hash-checked against the SAME oracle as the batch twin
-    curation_admission_delta: stream == batch == DuckDB."""
+    hash-checked against the SAME oracle as the batch twin:
+    stream == batch == DuckDB."""
     from benchviz_spark.operators.curation import build_admission_index
 
     build_admission_index(spark, sf_dir)

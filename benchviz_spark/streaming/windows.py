@@ -302,7 +302,7 @@ def stream_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return document_dhashes(
         # stateless repartition: a single-file micro-batch arrives as one
         # partition and would serialize the compute-heavy stage onto one
-        # core (same sizing move as stream_dedup_admission)
+        # core (same sizing move as curation.admit_vs_standing)
         read_documents_stream(spark, sf_dir)
         .select("doc_id", "text")
         .repartition(spark.sparkContext.defaultParallelism)
@@ -323,7 +323,7 @@ def stream_video_frame_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return document_frame_dhashes(
         # stateless repartition: a single-file micro-batch arrives as one
         # partition and would serialize the compute-heavy stage onto one
-        # core (same sizing move as stream_dedup_admission)
+        # core (same sizing move as curation.admit_vs_standing)
         read_documents_stream(spark, sf_dir)
         .select("doc_id", "text")
         .repartition(spark.sparkContext.defaultParallelism)
@@ -343,7 +343,7 @@ def stream_classifier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return classifier_projection(
         # stateless repartition: a single-file micro-batch arrives as one
         # partition and would serialize the compute-heavy stage onto one
-        # core (same sizing move as stream_dedup_admission)
+        # core (same sizing move as curation.admit_vs_standing)
         read_documents_stream(spark, sf_dir)
         .select("doc_id", "text")
         .repartition(spark.sparkContext.defaultParallelism)
@@ -382,7 +382,7 @@ def stream_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_documents_stream(spark, sf_dir)
         .select("doc_id", "source", "text")
         # stateless repartition before the per-row token fold (same
-        # sizing move as stream_dedup_admission)
+        # sizing move as curation.admit_vs_standing)
         .repartition(spark.sparkContext.defaultParallelism)
         .select("doc_id", "source", F.round(logw, 6).alias("log_weight"))
     )
@@ -403,7 +403,11 @@ def stream_decontam_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the UDF so rounding semantics (HALF_UP) match the batch query and
     the DuckDB oracle exactly (Python's round() is banker's and WOULD
     drift on 7-digit-exact ratios like 1/128)."""
-    from benchviz_spark.operators.decontam import NGRAM, eval_split
+    from benchviz_spark.operators.decontam import (
+        NGRAM,
+        _seg_member_counts,
+        eval_split,
+    )
     from benchviz_spark.operators.dedup import _norm_text, _shingles
 
     from pyspark.sql import functions as F
@@ -421,7 +425,7 @@ def stream_decontam_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_documents_stream(spark, sf_dir)
         .filter(~eval_split(F.col("doc_id")))
         # stateless repartition before the shingle projection + Python
-        # probe (same sizing move as stream_dedup_admission)
+        # probe (same sizing move as curation.admit_vs_standing)
         .repartition(spark.sparkContext.defaultParallelism)
         .select("doc_id", _shingles(toks, NGRAM).alias("shingles"))
     )
@@ -454,74 +458,6 @@ def stream_decontam_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _seg_member_counts(col, member):
-    """(lens, hit_counts) per row of a pandas column of string lists,
-    computed over the FLATTENED batch: one vectorized isin over every
-    shingle in the micro-batch plus a cumsum-difference per segment,
-    instead of a Python membership loop per document (r15: the per-doc
-    ``sum(1 for g in shs if g in ev)`` loops were the micro-batch's
-    compute wall). Exact: set membership on identical Python strings."""
-    import numpy as np
-    import pandas as pd
-
-    lens = np.fromiter((len(v) for v in col), dtype=np.int64, count=len(col))
-    if int(lens.sum()) == 0:
-        return lens, np.zeros(len(col), dtype=np.int64)
-    flat = [g for v in col for g in v]
-    hits = pd.Series(flat, dtype=object).isin(member).to_numpy(dtype=np.int64)
-    c = np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(hits)])
-    ends = np.cumsum(lens)
-    return lens, c[ends] - c[ends - lens]
-
-
-def _band_keys_vec(col, params, p, n_bands, rows_per_band):
-    """Per-row MinHash band-key lists for a pandas column of shingle
-    lists — the stream twin of the batch ``band_buckets`` formula,
-    vectorized over the flattened micro-batch: one md5 per UNIQUE
-    shingle (documents share vocabulary), all 32 affine hashes as one
-    (32, total) int64 matrix op (operands stay < 2^62, exact), and
-    per-document minima via minimum.reduceat over the segment starts.
-    Replaces a pure-Python md5+min loop per document measured as the
-    dominant cost of the streamed admission probe. Bit-identical keys:
-    same md5 base, same affine family, same decimal join."""
-    import hashlib
-
-    import numpy as np
-
-    a_arr = np.array([a for a, _ in params], dtype=np.int64).reshape(-1, 1)
-    b_arr = np.array([b for _, b in params], dtype=np.int64).reshape(-1, 1)
-    lens = np.fromiter((len(v) for v in col), dtype=np.int64, count=len(col))
-    out = [[] for _ in range(len(lens))]
-    if int(lens.sum()) == 0:
-        return out
-    flat = [s for v in col for s in v]
-    uniq, inv = np.unique(np.asarray(flat, dtype=object), return_inverse=True)
-    ubase = np.fromiter(
-        (
-            int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16) % p
-            for s in uniq
-        ),
-        dtype=np.int64,
-        count=len(uniq),
-    )
-    bases = ubase[inv]
-    vals = (a_arr * bases[None, :] + b_arr) % p
-    ends = np.cumsum(lens)
-    nonzero = np.nonzero(lens)[0]
-    starts = (ends - lens)[nonzero]
-    mins = np.minimum.reduceat(vals, starts, axis=1)
-    for j, i in enumerate(nonzero):
-        m = mins[:, j]
-        out[i] = [
-            "_".join(
-                str(int(m[bi * rows_per_band + r]))
-                for r in range(rows_per_band)
-            )
-            for bi in range(n_bands)
-        ]
-    return out
-
-
 def sw_shingled_eval(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
     """Eval-carve documents shingled batch-side (the static side of the
     streamed decontamination gate)."""
@@ -536,194 +472,21 @@ def sw_shingled_eval(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
 def stream_dedup_admission(
     spark: SparkSession, sf_dir: str, prefix: str = "admission"
 ) -> DataFrame:
-    """Streaming twin of curation.admission_delta_indexed: arriving
-    documents admitted or dropped per-document against the DURABLE
-    standing-corpus admission index (curation.build_admission_index) —
-    the persisted (band, bucket) postings, fingerprint store, Bloom
-    bitset, and eval-gram blocklist become the single admission source
-    of truth across batch and stream (VERDICT r14 #5).
-
-    Shape, tier by tier:
-    - hygiene: eval carve + length are stateless scan filters; the
-      contamination count probes the frozen eval-gram set inside
-      mapInPandas (the stream_decontam_gate pattern), and the ratio
-      flag is computed by Catalyst F.round so the HALF_UP boundary is
-      bit-identical to the batch gate. The division lives inside a
-      when(n_shingles > 0) branch — ANSI mode raises on /0 and a guard
-      conjunct does not protect a sibling conjunct.
-    - minhash: the same mapInPandas pass computes each document's
-      N_BANDS bucket strings with the batch formula verbatim (md5-based
-      base, the module's _HASH_PARAMS affine family, decimal-joined
-      band keys) — pure per-row integer arithmetic, so stream keys
-      equal batch keys equal the DuckDB oracle's.
-    - exact tier: the persisted ~8 KiB Bloom bitset ships as a literal
-      map column (collected once at plan time — it IS a constant of the
-      standing epoch); only bloom-positive rows reach the stream-static
-      LEFT ANTI join against the fp-bucketed index.
-    - near-dup tier: posexplode_outer the bucket keys (outer: a
-      shingle-less document has no bands and must stay admitted), then
-      stream-static equi-join the (band, bucket)-bucketed postings and
-      the doc_id-bucketed shingle store — the corpus side never moves —
-      and verify by exact Jaccard. left_outer joins keep
-      candidate-less rows alive for the final verdict.
-    - verdict: groupBy(doc) agg any(verified) — a per-arriving-doc
-      aggregation, drained in complete mode by the registered gate
-      (each doc_id arrives exactly once, so complete == the admitted
-      set; a production deployment emits per-micro-batch updates).
-
-    Candidate pairs are NOT pre-deduped across bands (the batch path's
-    .distinct() before verification): the any()-verdict makes
-    duplicate candidates harmless, and dropping the distinct keeps the
-    pre-aggregation pipeline stateless."""
+    """Streaming twin of curation.admission_delta_indexed: the document
+    stream through the same per-document admission decision
+    (curation.admit_vs_standing) against the DURABLE standing-corpus
+    index (curation.build_admission_index), so the index is the single
+    admission source of truth across batch and stream (VERDICT r14 #5).
+    The decision's verdict is a per-document aggregation, drained in
+    complete mode by the registered gate (each doc_id arrives exactly
+    once, so complete == the admitted set)."""
     from benchviz_spark.operators.curation import (
-        MIN_CHARS,
         _with_split,
-        admission_index_names,
-    )
-    from benchviz_spark.operators.decontam import NGRAM as DECONTAM_NGRAM
-    from benchviz_spark.operators.decontam import THRESHOLD, eval_split
-    from benchviz_spark.operators.dedup import (
-        _HASH_PARAMS,
-        _INCR_SEEN_RE,
-        _MERSENNE31,
-        N_BANDS,
-        ROWS_PER_BAND,
-        _norm_text,
-        _shingles,
-        jaccard_of,
-    )
-    from benchviz_spark.operators.relational_ext import bloom_might_contain
-
-    names = admission_index_names(prefix)
-
-    # Frozen standing state, all index-epoch constants: the eval-gram
-    # blocklist (eval-carve bounded, broadcast) and the one-row bloom
-    # bitset (literalized — the stream plan carries it like any other
-    # constant of the epoch).
-    ev_set = frozenset(
-        r.g for r in spark.table(names["eval_grams"]).collect()
-    )
-    bc = spark.sparkContext.broadcast(ev_set)
-    bloom_map = spark.table(names["bloom"]).collect()[0]["bloom"]
-    # Build the literal map in ONE py4j call: r15 already collapsed the
-    # ~2048 per-entry literal Columns (~6 s of py4j) into two array
-    # literals, but F.lit over a 1024-element Python list still
-    # serialized element-by-element — profiled at ~1 s of the ~2.1 s
-    # steady-state plan build (OPTIMIZATION_r16.md; `perfbench/run.py
-    # --workload curation_sf001 --trace 1` gives the current build/exec
-    # split).
-    # A SQL literal string parses JVM-side in milliseconds and
-    # constant-folds to the identical map<int,bigint>.
-    bloom_keys = [int(k) for k in sorted(bloom_map)]
-    bloom_vals = [int(bloom_map[k]) for k in sorted(bloom_map)]
-    bloom_lit = F.expr(
-        "map_from_arrays(array({}), array({}))".format(
-            ",".join(str(k) for k in bloom_keys),
-            ",".join(f"{v}L" for v in bloom_vals),
-        )
+        admission_tables,
+        admit_vs_standing,
     )
 
-    params = list(_HASH_PARAMS)
-    p = _MERSENNE31
-    n_bands, rows_per_band = N_BANDS, ROWS_PER_BAND
-
-    toks = F.split(_norm_text(F.col("text")), " ")
-    # Stateless repartition to cluster parallelism BEFORE the heavy
-    # projection: the shingling expressions and the per-shingle md5
-    # loop inside probe() below are the micro-batch's compute wall,
-    # and a single-file micro-batch (the test layout) arrives as ONE
-    # partition — serializing all of it onto one core. Exchanging the
-    # batch-sized rows once per micro-batch is the standard sizing
-    # move for a compute-bound stream stage; the per-document verdict
-    # is partitioning-independent (pure projections + a final groupBy).
-    stream = (
-        read_documents_stream(spark, sf_dir)
-        .filter(~F.col("source").rlike(_INCR_SEEN_RE))
-        .filter(
-            (~eval_split(F.col("doc_id"))) & (F.col("n_chars") >= MIN_CHARS)
-        )
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select(
-            "doc_id",
-            "lang",
-            "source",
-            "n_chars",
-            F.md5(_norm_text(F.col("text"))).alias("fp"),
-            _shingles(toks, DECONTAM_NGRAM).alias("g4"),
-            _shingles(toks, 3).alias("g3"),
-            F.array_distinct(
-                F.transform(_shingles(toks, 3), lambda s: F.xxhash64(s))
-            ).alias("hs"),
-        )
-    )
-
-    def probe(batches):
-        import pandas as pd
-
-        ev = bc.value
-
-        for pdf in batches:
-            n_sh, n_cont = _seg_member_counts(pdf["g4"], ev)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "lang": pdf["lang"],
-                    "source": pdf["source"],
-                    "n_chars": pdf["n_chars"],
-                    "fp": pdf["fp"],
-                    "hs": pdf["hs"],
-                    "n_shingles": n_sh,
-                    "n_contaminated": n_cont,
-                    "buckets": _band_keys_vec(
-                        pdf["g3"], params, p, n_bands, rows_per_band
-                    ),
-                }
-            )
-
-    probed = stream.mapInPandas(
-        probe,
-        "doc_id long, lang string, source string, n_chars long, fp string,"
-        " hs array<long>, n_shingles long, n_contaminated long,"
-        " buckets array<string>",
-    )
-
-    contaminated = F.when(
-        F.col("n_shingles") > 0,
-        F.round(F.col("n_contaminated") / F.col("n_shingles"), 6)
-        >= THRESHOLD,
-    ).otherwise(F.lit(False))
-    clean = probed.filter(~contaminated).withColumn("bloom", bloom_lit)
-
-    maybe_seen = bloom_might_contain(F.xxhash64("fp"))
-    flagged = clean.withColumn("maybe_seen", maybe_seen).drop("bloom")
-    old_fps = spark.table(names["fps"]).select("fp")
-    new_vs_old = flagged.filter(~F.col("maybe_seen")).unionByName(
-        flagged.filter(F.col("maybe_seen")).join(old_fps, "fp", "left_anti")
-    )
-
-    exploded = new_vs_old.select(
-        "doc_id",
-        "lang",
-        "source",
-        "n_chars",
-        "hs",
-        F.posexplode_outer("buckets").alias("band", "bucket"),
-    )
-    old_b = spark.table(names["bands"]).select(
-        F.col("doc_id").alias("old_id"), "band", "bucket"
-    )
-    old_sh = spark.table(names["shingles"]).select(
-        F.col("doc_id").alias("old_id"), F.col("hs").alias("sb")
-    )
-    cand = exploded.join(old_b, ["band", "bucket"], "left_outer").join(
-        old_sh, "old_id", "left_outer"
-    )
-    jac = jaccard_of("hs", "sb")
-    verified = F.coalesce(jac >= 0.5, F.lit(False))
-    admitted = (
-        cand.groupBy("doc_id", "lang", "source", "n_chars")
-        .agg(F.max(verified).alias("dropped"))
-        .filter(~F.col("dropped"))
-        .drop("dropped")
+    admitted, _ = admit_vs_standing(
+        spark, read_documents_stream(spark, sf_dir), admission_tables(spark, prefix)
     )
     return _with_split(admitted)

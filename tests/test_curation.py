@@ -3,6 +3,7 @@ audit / cluster-safe-split pair."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -172,17 +173,23 @@ def test_indexed_admission_matches_in_session(spark):
     assert len(base) > 0  # a trivially-empty delta would prove nothing
 
 
-def test_indexed_admission_reads_corpus_side_from_bucketed_tables(spark):
+def test_indexed_admission_reads_corpus_side_from_bucketed_tables(
+    spark, monkeypatch
+):
     """The point of the index: per-ingest, the corpus side is READ,
-    never recomputed. The consume plan must source the standing bands
-    and shingles from the bucketed catalog tables (their relation
-    names appear as table scans), and the documents scans that remain
-    must all be batch-pruned (every documents read carries the
+    never recomputed. The consume plan must source the standing bands,
+    shingles and fingerprints from the bucketed catalog tables (their
+    relation names appear as table scans), and the documents scans that
+    remain must all be batch-pruned (every documents read carries the
     source-regex batch filter, so no corpus-sized document pass
-    survives)."""
+    survives). The bloom bitset and the eval-gram set are constants of
+    the epoch that the decision collects at plan time, so they leave
+    the plan: sentinels over the standing relations record that the
+    decision read both from the index it was handed."""
     import io
     import contextlib
 
+    from benchviz_spark.operators import curation
     from benchviz_spark.operators.curation import (
         admission_index_names,
         build_admission_index,
@@ -191,9 +198,29 @@ def test_indexed_admission_reads_corpus_side_from_bucketed_tables(spark):
 
     from benchviz_spark.caching import clear_caches
 
+    collected = []
+
+    class Recording:
+        def __init__(self, part, df):
+            self.part, self.df = part, df
+
+        def collect(self):
+            collected.append(self.part)
+            return self.df.collect()
+
+    tables = curation.admission_tables
+
+    def recorded_tables(spark, prefix="admission"):
+        standing = tables(spark, prefix)
+        for part in ("bloom", "eval_grams"):
+            standing[part] = Recording(part, standing[part])
+        return standing
+
     build_admission_index(spark, SF_DIR)
+    monkeypatch.setattr(curation, "admission_tables", recorded_tables)
     df = incremental_batch_indexed(spark, SF_DIR)
-    # The r15 scratch persists would hide the documents scans behind
+    assert sorted(collected) == ["bloom", "eval_grams"]
+    # The scratch persists would hide the documents scans behind
     # InMemoryRelation leaves in the optimized plan; unpersist BEFORE
     # the (lazy) plan introspection so cache substitution does not
     # occur and every scan is visible to the per-scan gate walk below.
@@ -205,7 +232,7 @@ def test_indexed_admission_reads_corpus_side_from_bucketed_tables(spark):
         df.explain("formatted")
     plan = buf.getvalue()
     names = admission_index_names()
-    for part in ("bands", "shingles", "fps", "bloom", "eval_grams"):
+    for part in ("bands", "shingles", "fps"):
         assert names[part] in plan, f"index table {names[part]} not scanned"
     # no un-gated corpus document scan: EVERY documents relation in the
     # optimized plan must sit directly under a Filter carrying the
@@ -229,3 +256,79 @@ def test_indexed_admission_reads_corpus_side_from_bucketed_tables(spark):
         if not (i > 0 and "Filter" in lines[i - 1] and "RLIKE(source" in lines[i - 1])
     ]
     assert not unguarded, f"documents scans without a batch-gate Filter: {unguarded}"
+
+
+SMOKE_PREFIX = "admission_smoke"
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def test_admission_index_memo_rebuilds_a_dropped_table(spark, sf_smoke_dir):
+    """A memo hit must not outlive its tables: after a DROP, the next
+    build call rebuilds the index instead of handing back names that
+    no longer resolve."""
+    from benchviz_spark.operators.curation import (
+        admission_delta_indexed,
+        build_admission_index,
+    )
+
+    names = build_admission_index(spark, sf_smoke_dir, prefix=SMOKE_PREFIX)
+    before = _rows(admission_delta_indexed(spark, sf_smoke_dir, SMOKE_PREFIX))
+    spark.sql(f"DROP TABLE {names['fps']}")
+    assert build_admission_index(spark, sf_smoke_dir, prefix=SMOKE_PREFIX) == names
+    assert spark.catalog.tableExists(names["fps"])
+    assert _rows(admission_delta_indexed(spark, sf_smoke_dir, SMOKE_PREFIX)) == before
+    assert before  # a trivially-empty delta would prove nothing
+
+
+def test_admission_decision_is_partition_and_aqe_invariant(spark, sf_smoke_dir):
+    """The admission delta's row set does not depend on the shuffle
+    partition count or on AQE, and the decision materializes nothing:
+    the delta enrolls no admission scratch entry, and the incremental
+    path at most two (the probed batch and its survivor set)."""
+    from benchviz_spark.caching import clear_caches
+    from benchviz_spark.operators.curation import (
+        _ADMIT_SCRATCH,
+        admission_delta_indexed,
+        build_admission_index,
+        incremental_batch_indexed,
+    )
+
+    clear_caches()
+    build_admission_index(spark, sf_smoke_dir, prefix=SMOKE_PREFIX)
+    n0 = len(_ADMIT_SCRATCH)
+    base = _rows(admission_delta_indexed(spark, sf_smoke_dir, SMOKE_PREFIX))
+    assert base
+    assert len(_ADMIT_SCRATCH) == n0
+    for key, value in (
+        ("spark.sql.shuffle.partitions", "1"),
+        ("spark.sql.shuffle.partitions", "7"),
+        ("spark.sql.adaptive.enabled", "false"),
+    ):
+        old = spark.conf.get(key)
+        spark.conf.set(key, value)
+        try:
+            got = _rows(admission_delta_indexed(spark, sf_smoke_dir, SMOKE_PREFIX))
+        finally:
+            spark.conf.set(key, old)
+        assert got == base, f"{key}={value} changed the admission delta"
+    incremental_batch_indexed(spark, sf_smoke_dir, SMOKE_PREFIX).collect()
+    assert len(_ADMIT_SCRATCH) - n0 <= 2
+
+
+def test_standing_build_unpersists_its_token_pass_when_a_store_raises(spark, sf_smoke_dir):
+    """The standing build's shared token pass is persisted outside any
+    cache clear_caches() reaches, so a failing store must not leave its
+    blocks pinned."""
+    from benchviz_spark.operators.curation import _standing_relations
+
+    def store(part, df):
+        raise RuntimeError(f"store {part} failed")
+
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    with pytest.raises(RuntimeError, match="store"):
+        _standing_relations(spark, sf_smoke_dir, store)
+    assert persistent().size() == before
