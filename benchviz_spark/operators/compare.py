@@ -22,12 +22,17 @@ def align_series(
     """Full-outer alignment of two (key, metric...) series: one row per
     key, nulls where a side has no observation — the invariant the
     reference states as "a chart only has one row per date"
-    (generate_benchmark_plot.js:143)."""
-    lcols = [c for c in left.columns if c != on]
-    rcols = [c for c in right.columns if c != on]
-    lren = left.select(on, *[F.col(c).alias(c + lsuffix) for c in lcols])
-    rren = right.select(on, *[F.col(c).alias(c + rsuffix) for c in rcols])
-    return lren.join(rren, on=on, how="full_outer")
+    (generate_benchmark_plot.js:143).
+
+    Output columns: ``on``, then the left's other columns suffixed
+    ``lsuffix``, then the right's suffixed ``rsuffix``, each side in its
+    input order. A USING join already emits exactly that order (the
+    coalesced key, the left's columns, the right's), so one positional
+    ``toDF`` names them. Over two one-partition inputs sorted on ``on``
+    (``point_lookup``'s output) the sort-merge join plans no Exchange."""
+    lcols = [c + lsuffix for c in left.columns if c != on]
+    rcols = [c + rsuffix for c in right.columns if c != on]
+    return left.join(right, on=on, how="full_outer").toDF(on, *lcols, *rcols)
 
 
 def pivot_series(

@@ -5,8 +5,10 @@ one JSON per test + catalog -> publish. On Spark that collapses into a
 single lazy plan: text scan (with partition-style pruning by path) ->
 native regex projections -> LWW dedup window -> one range exchange that
 clusters the fact table by (package, test_name) -> parallel serving
-writes. The per-test aggregation and the point lookups read that
-clustering and add no shuffle of their own. The S3 sync steps
+writes. The per-test aggregation reads that clustering and adds no
+shuffle of its own. A point lookup gathers its few rows into one
+partition and a compare merges two such series; over the cached fact
+either runs as one job with no shuffle. The S3 sync steps
 dissolve: ``spark.read`` addresses ``s3a://`` URIs directly.
 """
 
@@ -61,17 +63,24 @@ def point_lookup(fact: DataFrame, package: str, test_name: str) -> DataFrame:
     predicates prune partitions/files when the fact table is stored
     partitioned by package.
 
-    The order key is (package, test_name, run_date), not run_date alone:
-    under the two equality filters both give the same row order, but the
-    three-column key is the one ``build_fact_table`` clusters by. Over
-    that cached layout Catalyst finds the ordering already satisfied
-    (RangePartitioning(package, test_name) satisfies the ordered
-    distribution on the longer key), so the plan has no Exchange and no
-    Sort and the lookup runs as one job. Over any other input the result
-    is the same, at the cost of the usual range exchange and sort."""
+    The series is gathered, not globally sorted: filter -> ``coalesce(1)``
+    -> ``sortWithinPartitions("run_date")``. Its output is then one
+    partition (``SinglePartition``) in run_date order on any input,
+    with no Exchange, so a lookup runs as one job without relying on
+    the fact table's layout. Two gathered series also satisfy the
+    distribution and ordering a sort-merge join on run_date needs, so
+    ``align_series`` over two lookups plans no Exchange either (a
+    compare is one job).
+
+    Scale trade-off: ``coalesce(1)`` is narrow, so the filter and the
+    scan under it run in a single task. Over a cached fact the batch
+    statistics prune most batches before that task reads them; over an
+    uncached fact the scan and parse stay parallel behind the fact's
+    own exchanges, and only the filtered rows meet in one task."""
     return (
         fact.filter((F.col("package") == package) & (F.col("test_name") == test_name))
-        .orderBy("package", "test_name", "run_date")
+        .coalesce(1)
+        .sortWithinPartitions("run_date")
         .select("run_date", "ns_per_op", "allocs_per_op", "bytes_per_op", "mb_per_s")
     )
 
@@ -615,11 +624,11 @@ def bench_log_compare_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact semantics generate_benchmark_plot.js:129-180 builds
     row-by-row in the browser.
 
-    Scale: two filtered passes over the same fact scan joined
-    full-outer on the date key — one shuffle on a key whose
-    cardinality is the calendar, never the corpus; at a real tree the
-    per-test equality predicates prune to two partition-sized reads
-    before the join (see point_lookup)."""
+    Scale: two filtered passes over the same fact scan, each gathered
+    into one run_date-sorted partition by point_lookup, then merged
+    full-outer on the date key with no shuffle of its own: each side
+    holds one row per date, so the merge is calendar-sized, never
+    corpus-sized. Over a cached fact the whole compare is one job."""
     from benchviz_spark.operators.compare import align_series
 
     fact = _tree_fact(spark, "compare", _COMPARE_TREE)

@@ -179,9 +179,11 @@ def build_fact_table(
     The table ends range-partitioned on (package, test_name) and sorted
     within partitions by (package, test_name, run_date): its physical
     layout is the serving layout. A cached fact then reports that
-    partitioning and ordering, so a point lookup's ordered read needs no
-    exchange and no sort (one job), and the per-test aggregation and the
-    catalog's ``distinct`` need no shuffle of their own.
+    partitioning and ordering, so the per-test aggregation and the
+    catalog's ``distinct`` need no shuffle of their own, and the cached
+    batches' min/max statistics let a point lookup's filter skip every
+    batch but the few that hold its test (the lookup's one-job gather
+    itself does not depend on this layout).
 
     The range exchange sits AFTER the LWW window, which keeps its own
     hash shuffle: there the RangePartitioner's sampling job reads the

@@ -10,7 +10,9 @@ one untimed warm-up scan.
 
 For each query the report gives every arm's median and quartiles of
 the wall, and for each later arm its per-round wins against the first
-(lower wall wins; ties count for neither side).
+(lower wall wins; ties count for neither side). A single arm is timed
+alone, with no wins: to time one checkout against another, run one arm
+in each checkout.
 
 Run:  python scripts/ab.py --rounds 4 --queries q1_pricing_summary q9_... \\
           --arm base --arm smj spark.sql.join.preferSortMergeJoin=false \\
@@ -40,6 +42,14 @@ def parse_arm(tokens: list[str]) -> tuple[str, dict[str, str], dict[str, str]]:
             raise SystemExit(f"arm {name}: expected KEY=VAL, got {tok!r}")
         (conf if key.startswith("spark.") else env)[key] = val
     return name, conf, env
+
+
+def parse_arms(groups: list[list[str]]) -> list[tuple[str, dict[str, str], dict[str, str]]]:
+    """Every ``--arm`` group parsed; arm names must be distinct."""
+    arms = [parse_arm(g) for g in groups]
+    if len({a[0] for a in arms}) != len(arms):
+        raise SystemExit("arm names must be distinct")
+    return arms
 
 
 def quartiles(xs: list[float]) -> tuple[float, float, float]:
@@ -98,9 +108,7 @@ def main() -> None:
     ap.add_argument("--queries", nargs="+", required=True)
     ap.add_argument("--rounds", type=int, default=4)
     args = ap.parse_args()
-    arms = [parse_arm(a) for a in args.arm]
-    if len(arms) < 2 or len({a[0] for a in arms}) != len(arms):
-        raise SystemExit("need two or more arms with distinct names")
+    arms = parse_arms(args.arm)
     from benchviz_spark.registry import all_queries
     from benchviz_spark.sources.tables import DEFAULT_SF_DIR
 

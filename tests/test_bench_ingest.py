@@ -11,6 +11,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from benchviz_spark.operators.compare import align_series
 from benchviz_spark.pipeline import catalog_listing, point_lookup, run_pipeline
 from benchviz_spark.serving.json_sink import (
     catalog_json,
@@ -263,20 +264,56 @@ def test_pipeline_end_to_end(spark, sample_tree, tmp_path):
     assert len(series) == 1 and series[0].ns_per_op == 1328086
 
 
-def test_point_lookup_over_pipeline_fact_is_one_job(spark, sample_tree, tmp_path):
-    """Over run_pipeline's cached, clustered fact table a lookup needs no
-    range-sampling job and no shuffle: exactly one Spark job."""
-    fact = run_pipeline(spark, sample_tree, str(tmp_path / "deploy"))
+def _collect_counting_jobs(spark, group: str, df) -> tuple[list, int]:
+    """``df``'s rows and the number of Spark jobs collecting them ran."""
     sc = spark.sparkContext
-    group = "test_point_lookup_one_job"
-    sc.setJobGroup(group, "point_lookup over the pipeline fact")
+    sc.setJobGroup(group, group)
     try:
-        rows = point_lookup(fact, "sql", "BenchmarkBank2_Cockroach-8").collect()
+        rows = df.collect()
     finally:
         for key in ("spark.jobGroup.id", "spark.job.description"):
             sc.setLocalProperty(key, None)
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_point_lookup_over_pipeline_fact_is_one_job(spark, sample_tree, tmp_path):
+    """Over run_pipeline's cached fact table a lookup needs no
+    range-sampling job and no shuffle: exactly one Spark job, also for
+    a key that is not there."""
+    fact = run_pipeline(spark, sample_tree, str(tmp_path / "deploy"))
+    rows, jobs = _collect_counting_jobs(
+        spark, "test_point_lookup_one_job",
+        point_lookup(fact, "sql", "BenchmarkBank2_Cockroach-8"),
+    )
     assert len(rows) == 1
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert jobs == 1
+    rows, jobs = _collect_counting_jobs(
+        spark, "test_point_lookup_missing_key_one_job",
+        point_lookup(fact, "sql", "BenchmarkAbsent-8"),
+    )
+    assert rows == []
+    assert jobs == 1
+
+
+def test_compare_over_pipeline_fact_is_one_job(spark, sample_tree, tmp_path):
+    """Two gathered lookups already meet the sort-merge join's
+    distribution and ordering, so a compare over run_pipeline's cached
+    fact shuffles nothing: exactly one Spark job."""
+    fact = run_pipeline(spark, sample_tree, str(tmp_path / "deploy"))
+    rows, jobs = _collect_counting_jobs(
+        spark, "test_compare_one_job",
+        align_series(
+            point_lookup(fact, "sql", "BenchmarkBank2_Cockroach-8"),
+            point_lookup(fact, "sql", "BenchmarkSame-8"),
+            on="run_date",
+        ),
+    )
+    # the two series share no date, so each row is null-padded on one side
+    assert sorted((r.run_date, r.ns_per_op_a, r.ns_per_op_b) for r in rows) == [
+        (datetime.date(2015, 1, 1), 1328086, None),
+        (datetime.date(2015, 12, 15), None, 2),
+    ]
+    assert jobs == 1
 
 
 @pytest.fixture(scope="module")
@@ -317,6 +354,98 @@ def test_point_lookup_rows_in_run_date_order(spark, series_tree):
                     assert [r.ns_per_op for r in series] == [100 * i + d for d in range(4)]
     finally:
         clustered.unpersist()
+
+
+def test_lookups_and_compares_are_partition_and_aqe_invariant(spark):
+    """Every request shape returns the same rows under 1, 7 and 32 shuffle
+    partitions, with AQE on and off, over a freshly built fact and over
+    its cached copy: a lookup, a missing key, a compare of partly
+    overlapping series, a compare against an absent key (the other side
+    null-padded) and a compare of a key with itself."""
+    from benchviz_spark.pipeline import _COMPARE_TREE, _tree_fact
+
+    d1, d2, d3 = (datetime.date(2017, 1, day) for day in (1, 2, 3))
+    old = [(d1, 1000), (d2, 1100)]
+    expected = {
+        "lookup": old,
+        "missing": [],
+        "compare": [(d1, 1000, None), (d2, 1100, 500), (d3, None, 550)],
+        "absent": [(d, n, None) for d, n in old],
+        "self": [(d, n, n) for d, n in old],
+    }
+
+    def requests(fact) -> dict:
+        lookup = [(r.run_date, r.ns_per_op)
+                  for r in point_lookup(fact, "sql", "BenchmarkOld-8").collect()]
+        pairs = {"compare": "BenchmarkNew-8", "absent": "BenchmarkAbsent-8",
+                 "self": "BenchmarkOld-8"}
+        out = {"lookup": lookup,
+               "missing": point_lookup(fact, "sql", "BenchmarkAbsent-8").collect()}
+        for name, right in pairs.items():
+            rows = sorted(align_series(
+                point_lookup(fact, "sql", "BenchmarkOld-8"),
+                point_lookup(fact, "sql", right), on="run_date",
+            ).collect(), key=lambda r: r.run_date)
+            # every column of a side is null together, never one alone
+            for r in rows:
+                for side in ("_a", "_b"):
+                    vals = [v for k, v in r.asDict().items() if k.endswith(side)]
+                    assert len(set(v is None for v in vals)) == 1, (name, r)
+            out[name] = [(r.run_date, r.ns_per_op_a, r.ns_per_op_b) for r in rows]
+        return out
+
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    saved = [spark.conf.get(k) for k in keys]
+    try:
+        for partitions in ("1", "7", "32"):
+            for aqe in ("true", "false"):
+                spark.conf.set(keys[0], partitions)
+                spark.conf.set(keys[1], aqe)
+                fact = _tree_fact(spark, "compare", _COMPARE_TREE)
+                got = requests(fact)
+                assert got == expected, (partitions, aqe, "uncached", got)
+                fact.cache().count()
+                try:
+                    got = requests(fact)
+                    assert got == expected, (partitions, aqe, "cached", got)
+                finally:
+                    fact.unpersist()
+    finally:
+        for k, v in zip(keys, saved):
+            spark.conf.set(k, v)
+
+
+def _align_by_renaming_selects(left, right, on: str, lsuffix="_a", rsuffix="_b"):
+    """The earlier align_series: rename each side, then the USING join."""
+    lren = left.select(on, *[F.col(c).alias(c + lsuffix) for c in left.columns if c != on])
+    rren = right.select(on, *[F.col(c).alias(c + rsuffix) for c in right.columns if c != on])
+    return lren.join(rren, on=on, how="full_outer")
+
+
+def test_align_series_contract(spark):
+    """Output columns are the key, then the left's other columns suffixed
+    in input order, then the right's, for a left whose key is not first
+    and a right of another width; dates on one side only are null-padded
+    on the other, and the result equals the rename-then-join form."""
+    d1, d2, d3 = (datetime.date(2020, 1, day) for day in (1, 2, 3))
+    left = spark.createDataFrame(
+        [(1, d1, "x1"), (2, d2, "x2")], "n long, run_date date, tag string"
+    )
+    right = spark.createDataFrame(
+        [(d2, 0.5, 20, "y2"), (d3, 0.75, 30, "y3")],
+        "run_date date, ratio double, n long, tag string",
+    )
+    got = align_series(left, right, on="run_date", lsuffix="_l", rsuffix="_r")
+    ref = _align_by_renaming_selects(left, right, "run_date", "_l", "_r")
+    assert got.columns == ["run_date", "n_l", "tag_l", "ratio_r", "n_r", "tag_r"]
+    assert got.schema == ref.schema
+    rows = sorted(map(tuple, got.collect()), key=lambda r: r[0])
+    assert rows == [
+        (d1, 1, "x1", None, None, None),
+        (d2, 2, "x2", 0.5, 20, "y2"),
+        (d3, None, None, 0.75, 30, "y3"),
+    ]
+    assert rows == sorted(map(tuple, ref.collect()), key=lambda r: r[0])
 
 
 def test_catalog_listing_priority_order(spark):

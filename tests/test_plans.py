@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -580,25 +581,57 @@ def _cached_demo_fact(spark):
     return fact
 
 
-def _above_cache_scan(plan: str) -> list[str]:
-    """The tree lines of a formatted plan above its InMemoryTableScan
-    (the operators that run on top of the cached relation)."""
-    tree = plan.split("\n\n")[0].splitlines()
-    cut = next(i for i, line in enumerate(tree) if "InMemoryTableScan" in line)
-    return tree[:cut]
+def _outside_cache(plan: str) -> list[str]:
+    """The tree lines of a formatted plan outside its cached relations'
+    own plans: every operator that runs on top of the cache scans."""
+    out, cached_depth = [], None
+    for line in plan.split("\n\n")[0].splitlines():
+        depth = next((i for i, ch in enumerate(line) if ch.isalpha() or ch in "*="), 0)
+        if cached_depth is not None and depth > cached_depth:
+            continue
+        cached_depth = depth if "InMemoryRelation" in line else None
+        out.append(line)
+    return out
 
 
-def test_point_lookup_over_clustered_cache_needs_no_exchange_or_sort(spark):
-    """build_fact_table clusters by (package, test_name) and sorts by
-    (package, test_name, run_date); over the cached table point_lookup's
-    ordering is already satisfied, so nothing shuffles or sorts."""
+def test_point_lookup_over_clustered_cache_gathers_without_exchange(spark):
+    """point_lookup gathers its rows instead of sorting globally: over the
+    cached fact the plan has no Exchange, one ``Coalesce 1``, and its only
+    Sort (run_date, within the one partition) sits above the Coalesce."""
     from benchviz_spark.pipeline import point_lookup
 
     fact = _cached_demo_fact(spark)
     try:
         plan = formatted_plan(point_lookup(fact, "sql", "BenchmarkScan1000_Cockroach-16"))
-        above = _above_cache_scan(plan)
-        assert not [l for l in above if "Exchange" in l or "Sort" in l], plan
+        ops = _outside_cache(plan)
+        assert not [l for l in ops if "Exchange" in l], plan
+        coalesce = [i for i, l in enumerate(ops) if "Coalesce" in l]
+        sorts = [i for i, l in enumerate(ops) if "Sort" in l]
+        assert len(coalesce) == 1 and len(sorts) == 1, plan
+        assert sorts[0] < coalesce[0], plan
+        assert re.search(r"\) Coalesce\n[^\n]*\nArguments: 1\n", plan), plan
+    finally:
+        fact.unpersist()
+
+
+def test_compare_over_clustered_cache_needs_no_exchange(spark):
+    """align_series over two point lookups joins two one-partition,
+    run_date-sorted series: the sort-merge join needs no Exchange above
+    either cache scan."""
+    from benchviz_spark.operators.compare import align_series
+    from benchviz_spark.pipeline import point_lookup
+
+    fact = _cached_demo_fact(spark)
+    try:
+        plan = formatted_plan(align_series(
+            point_lookup(fact, "sql", "BenchmarkScan1000_Cockroach-16"),
+            point_lookup(fact, "sql", "BenchmarkBank2_Cockroach-8"),
+            on="run_date",
+        ))
+        ops = _outside_cache(plan)
+        assert sum("InMemoryTableScan" in l for l in ops) == 2, plan
+        assert sum("SortMergeJoin" in l for l in ops) == 1, plan
+        assert not [l for l in ops if "Exchange" in l], plan
     finally:
         fact.unpersist()
 
@@ -611,6 +644,6 @@ def test_per_test_json_over_clustered_cache_adds_no_exchange(spark):
     fact = _cached_demo_fact(spark)
     try:
         plan = formatted_plan(per_test_json(fact))
-        assert not [l for l in _above_cache_scan(plan) if "Exchange" in l], plan
+        assert not [l for l in _outside_cache(plan) if "Exchange" in l], plan
     finally:
         fact.unpersist()

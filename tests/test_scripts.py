@@ -102,6 +102,16 @@ def test_ab_arm_splits_spark_conf_from_environment():
         ab.parse_arm(["bad", "no_equals_sign"])
 
 
+def test_ab_single_arm_reports_its_quartiles_and_no_wins():
+    arms = ab.parse_arms([["base"]])
+    assert arms == [("base", {}, {})]
+    rep = ab.report({"base": {"q": [3.0, 1.0, 2.0]}})["q"]
+    assert rep == {"base": {"q1": 1.5, "median": 2.0, "q3": 2.5,
+                            "walls": [3.0, 1.0, 2.0]}}
+    with pytest.raises(SystemExit):
+        ab.parse_arms([["base"], ["base", "X=1"]])
+
+
 # --- scale_tiers.build_tier ------------------------------------------------
 
 REPLICAS = 3
