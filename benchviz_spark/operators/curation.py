@@ -1439,13 +1439,12 @@ def _standing_token_pass(spark: SparkSession, docs: DataFrame) -> DataFrame:
         F.col("source").rlike(_INCR_SEEN_RE) | eval_split(F.col("doc_id"))
     )
     toks = F.split(_norm_text(F.col("text")), " ")
-    return spread(
-        spark,
-        pre.select(
-            "doc_id",
-            _shingles(toks, NGRAM).alias("s4"),
-            _shingles(toks, 3).alias("s3"),
-        ),
+    # spread the raw rows, THEN shingle: the projection runs above the
+    # round-robin exchange, in every task, instead of in the one scan task
+    return spread(spark, pre).select(
+        "doc_id",
+        _shingles(toks, NGRAM).alias("s4"),
+        _shingles(toks, 3).alias("s3"),
     )
 
 

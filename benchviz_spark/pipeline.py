@@ -3,10 +3,10 @@
 The reference's pipeline is: S3 sync -> walk tree -> parse -> nest ->
 one JSON per test + catalog -> publish. On Spark that collapses into a
 single lazy plan: text scan (with partition-style pruning by path) ->
-native regex projections -> LWW dedup window -> one range exchange that
-clusters the fact table by (package, test_name) -> parallel serving
-writes. The per-test aggregation reads that clustering and adds no
-shuffle of its own. A point lookup gathers its few rows into one
+native regex projections -> one hash exchange on (package, test_name)
+-> LWW dedup window -> parallel serving writes. The window and the
+per-test aggregation read that one clustering and add no shuffle of
+their own. A point lookup gathers its few rows into one
 partition and a compare merges two such series; over the cached fact
 either runs as one job with no shuffle. The S3 sync steps
 dissolve: ``spark.read`` addresses ``s3a://`` URIs directly.
@@ -241,7 +241,7 @@ def bench_regressions(
     swallowing it (ADVICE r14).
 
     Scale: one window keyed (package, test_name) — the key
-    ``build_fact_table`` already range-partitions by, so the window adds
+    ``build_fact_table`` already hash-partitions by, so the window adds
     no shuffle of its own (nor does the per-test serving aggregation).
     The metric tag joins the SORT key, not the partition key (a test's
     four series are a handful of rows; hashing them apart buys nothing),
@@ -347,8 +347,8 @@ _CATALOG_JSON_ORACLE = f"""
 def serving_catalog_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference S5 as a query: the single test_names.json document
     (``{pkg: [test,...]}``, both levels sorted) over the demo tree.
-    Two executor-side hash aggregations; only the one-row document
-    reaches the output."""
+    One executor-side aggregation of the (package, test) pairs; only the
+    one-row document reaches the output."""
     return catalog_json_df(_tree_fact(spark, "demo", _DEMO_TREE))
 
 
@@ -465,7 +465,7 @@ def bench_log_regressions(spark: SparkSession, sf_dir: str) -> DataFrame:
     the flag semantics hand-applied.
 
     Scale: one window keyed (package, test_name), which reuses the fact
-    table's range partitioning on that key (see bench_regressions)."""
+    table's hash partitioning on that key (see bench_regressions)."""
     fact = _tree_fact(spark, "regression", _REG_TREE)
     return bench_regressions(fact).orderBy("test_name", "metric", "run_date")
 
@@ -509,7 +509,7 @@ def bench_regressions_rolling(
     demo tree: +10% vs yesterday, +24% vs the rolling average).
 
     Scale: one window keyed (package, test_name, metric); the fact
-    table's range partitioning on (package, test_name) already satisfies
+    table's hash partitioning on (package, test_name) already satisfies
     it, so it adds no shuffle. The rolling frame must not read across a
     metric boundary, so metric joins the PARTITION key here (unlike
     ``bench_regressions``, whose lag guard suffices); a (package, test,

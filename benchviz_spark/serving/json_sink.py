@@ -13,8 +13,13 @@ hash-comparable to the reference's golden files
 (date keys sort lexically, like Go), and M gets a conditional
 integral/decimal rendering.
 
-Scale: the JSON document for each key is assembled executor-side by a
-hash aggregation; nothing is collected to the driver. The file writer
+Scale: the JSON document for each key is assembled executor-side by
+one aggregation keyed (package, test_name), which needs no shuffle over
+a fact clustered on that key (``build_fact_table``'s hash layout);
+nothing is collected to the driver. The catalog is one aggregation of
+the (package, test) pairs. Projections are SQL text, parsed in the JVM
+in one call each (built from ``F.*`` Columns, the per-test plan alone
+took ~700 py4j round trips to construct). The file writer
 is a ``foreachPartition`` fan-out — thousands of small serving files
 written in parallel, which is exactly the reference's serving layout
 (point lookups by key, SURVEY §2.1 S9).
@@ -134,6 +139,62 @@ def _go_number(col: F.Column) -> F.Column:
     )
 
 
+# ``with_go_number``'s stages as one SQL select list: each item reads
+# the items before it as lateral column aliases, and Spark's analyzer
+# resolves every alias level into its own Project. ``__gn_v`` is the
+# value being rendered. Regexes and literals are doubled-backslash SQL
+# text (a single backslash would be eaten by the SQL string literal).
+_GO_NUMBER_STAGES = (
+    "CAST(__gn_v AS STRING) AS __gn_plain",
+    "split(__gn_plain, 'E') AS __gn_parts",
+    "get(__gn_parts, 0) AS __gn_jmant",
+    "try_cast(get(__gn_parts, 1) AS INT) AS __gn_exp",
+    "try_cast(__gn_jmant AS DECIMAL(28,20)) AS __gn_jdec",
+    *(
+        f"CAST(round(__gn_jdec, {frac}) AS STRING) AS __gn_c{frac}"
+        for frac in (16, 15, 14)
+    ),
+    # shortest first: 15, 16, 17 significant digits, else Java's own
+    "CASE"
+    + "".join(
+        f" WHEN try_cast(concat(__gn_c{frac}, 'E', CAST(__gn_exp AS STRING))"
+        f" AS DOUBLE) <=> __gn_v THEN __gn_c{frac}"
+        for frac in (14, 15, 16)
+    )
+    + " ELSE __gn_jmant END AS __gn_mant",
+    "split(regexp_replace(__gn_mant, '-', ''), '\\\\.') AS __gn_mparts",
+    "CASE WHEN startswith(__gn_mant, '-') THEN '-' ELSE '' END AS __gn_sign",
+    "concat(get(__gn_mparts, 0), get(__gn_mparts, 1)) AS __gn_digits",
+    # digits left of the decimal point (rounding can carry: '9.99...'
+    # -> '10.0...', so not always one digit)
+    "__gn_exp + length(get(__gn_mparts, 0)) AS __gn_npoint",
+    "CASE"
+    " WHEN __gn_npoint <= 0"
+    " THEN concat(__gn_sign, '0.', repeat('0', -__gn_npoint), __gn_digits)"
+    " WHEN length(__gn_digits) <= __gn_npoint"
+    " THEN concat(__gn_sign, rpad(__gn_digits, __gn_npoint, '0'))"
+    " ELSE concat(__gn_sign, substring(__gn_digits, 1, __gn_npoint), '.',"
+    " substring(__gn_digits, __gn_npoint + 1, length(__gn_digits)))"
+    " END AS __gn_expanded",
+)
+# the final rendering, over the stages
+_GO_NUMBER_RENDER = (
+    "CASE"
+    " WHEN __gn_v = 0D AND startswith(__gn_plain, '-') THEN '-0'"
+    " WHEN __gn_v = CAST(try_cast(__gn_v AS BIGINT) AS DOUBLE)"
+    " AND abs(__gn_v) < 9007199254740992D"
+    " THEN CAST(try_cast(__gn_v AS BIGINT) AS STRING)"
+    " WHEN NOT contains(__gn_plain, 'E') THEN __gn_plain"
+    # drop trailing zeros, then a trailing point
+    " ELSE regexp_replace(regexp_replace(__gn_expanded,"
+    " '(\\\\.\\\\d*?)0+$', '$1'), '\\\\.$', '')"
+    " END"
+)
+_GO_NUMBER_SCRATCH = ["__gn_v"] + [
+    item.rsplit(" AS ", 1)[1] for item in _GO_NUMBER_STAGES
+]
+
+
 def with_go_number(df: DataFrame, col: F.Column, out: str) -> DataFrame:
     """Attach column ``out`` = ``_go_number(col)`` — same formula, same
     bytes — STAGED through intermediate columns instead of one nested
@@ -152,124 +213,54 @@ def with_go_number(df: DataFrame, col: F.Column, out: str) -> DataFrame:
     because CollapseProject does not inline non-cheap aliases that are
     referenced more than once.
 
+    The stages are one SQL select list (``_GO_NUMBER_STAGES``) in which
+    each step reads the earlier ones as lateral column aliases; the
+    analyzer resolves every alias level into its own Project, so the
+    plan has the same staging a chain of ``withColumns`` calls gives,
+    for a few Dataset calls instead of ~300 py4j round trips. A caller
+    column named ``__gn_*`` would shadow a lateral alias (and be
+    overwritten and dropped), so such inputs are refused.
+
     Eager-evaluation safety (the stages run for EVERY row, where the
     single expression evaluated the heavy branch lazily): array access
-    via ``F.get`` (NULL, never ANSI invalidArrayIndexError, on the
+    via ``get`` (NULL, never ANSI invalidArrayIndexError, on the
     E-less split) and ``try_cast`` for the decimal/int casts (NaN and
     Infinity renderings would throw under ANSI in a plain cast); for
-    rows the final when-chain routes to the cheap branches the staged
-    values are NULL-propagated and ignored, so the output is
-    byte-identical to ``_go_number`` (pinned by
-    test_go_number_staged_equals_reference plus the Go-oracle property
-    tests, which run against THIS path)."""
-    gn = lambda s: f"__gn_{s}"  # noqa: E731 - scratch-column namer
-    c = lambda s: F.col(gn(s))  # noqa: E731
-    # ADVICE r15: the scratch names are fixed, and a caller column named
-    # __gn_* would be silently overwritten and then dropped — refuse
-    # loudly instead (the helper is public API beyond per_test_json's
-    # narrow select).
+    rows the final CASE routes to the cheap branches the staged values
+    are NULL-propagated and ignored, so the output is byte-identical to
+    ``_go_number`` (pinned by test_go_number_staged_equals_reference
+    plus the Go-oracle property tests, which run against THIS path)."""
+    # ADVICE r15: the scratch names are fixed — refuse a clash loudly
+    # (the helper is public API beyond per_test_json's narrow select).
     clash = [name for name in df.columns if name.startswith("__gn_")]
     if clash:
         raise ValueError(
             f"with_go_number: input columns collide with scratch names: {clash}"
         )
-    strip = lambda x: F.regexp_replace(  # noqa: E731 - drop trailing zeros
-        F.regexp_replace(x.cast("string"), r"(\.\d*?)0+$", "$1"), r"\.$", ""
+    return (
+        df.select("*", col.alias("__gn_v"))
+        .selectExpr("*", *_GO_NUMBER_STAGES)
+        .withColumn(out, F.expr(_GO_NUMBER_RENDER))
+        .drop(*_GO_NUMBER_SCRATCH)
     )
-    df = df.withColumns({gn("plain"): col.cast("string")})
-    df = df.withColumns({gn("parts"): F.split(c("plain"), "E")})
-    df = df.withColumns(
-        {
-            gn("jmant"): F.get(c("parts"), 0),
-            gn("exp"): F.get(c("parts"), 1).try_cast("int"),
-        }
-    )
-    df = df.withColumns({gn("jdec"): c("jmant").try_cast("decimal(28,20)")})
-    df = df.withColumns(
-        {
-            gn(f"c{frac}"): F.round(c("jdec"), frac).cast("string")
-            for frac in (16, 15, 14)
-        }
-    )
-    roundtrips = lambda m: F.concat(  # noqa: E731 - candidate == input?
-        m, F.lit("E"), c("exp").cast("string")
-    ).try_cast("double").eqNullSafe(col)
-    mant = c("jmant")
-    # shortest first: 15, 16, 17 significant digits, else Java's own
-    for frac in (16, 15, 14):
-        cand = c(f"c{frac}")
-        mant = F.when(roundtrips(cand), cand).otherwise(mant)
-    df = df.withColumns({gn("mant"): mant})
-    df = df.withColumns(
-        {gn("mparts"): F.split(F.regexp_replace(c("mant"), "-", ""), r"\.")}
-    )
-    df = df.withColumns(
-        {
-            gn("sign"): F.when(c("mant").startswith("-"), F.lit("-")).otherwise(
-                F.lit("")
-            ),
-            gn("digits"): F.concat(F.get(c("mparts"), 0), F.get(c("mparts"), 1)),
-            # digits left of the decimal point (rounding can carry:
-            # '9.99...' -> '10.0...', so not always one digit)
-            gn("npoint"): c("exp") + F.length(F.get(c("mparts"), 0)),
-        }
-    )
-    expanded = (
-        F.when(
-            c("npoint") <= 0,
-            F.concat(
-                c("sign"),
-                F.lit("0."),
-                F.repeat(F.lit("0"), -c("npoint")),
-                c("digits"),
-            ),
-        )
-        .when(
-            F.length(c("digits")) <= c("npoint"),
-            F.concat(c("sign"), F.rpad(c("digits"), c("npoint"), "0")),
-        )
-        .otherwise(
-            F.concat(
-                c("sign"),
-                F.substring(c("digits"), F.lit(1), c("npoint")),
-                F.lit("."),
-                F.substring(
-                    c("digits"), c("npoint") + 1, F.length(c("digits"))
-                ),
-            )
-        )
-    )
-    df = df.withColumns({gn("expanded"): expanded})
-    as_long = col.try_cast("long")
-    rendered = (
-        F.when((col == 0.0) & c("plain").startswith("-"), F.lit("-0"))
-        .when(
-            (col == as_long.cast("double")) & (F.abs(col) < F.lit(2.0**53)),
-            as_long.cast("string"),
-        )
-        .when(~c("plain").contains("E"), c("plain"))
-        .otherwise(strip(c("expanded")))
-    )
-    scratch = [
-        gn(s)
-        for s in (
-            "plain",
-            "parts",
-            "jmant",
-            "exp",
-            "jdec",
-            "c16",
-            "c15",
-            "c14",
-            "mant",
-            "mparts",
-            "sign",
-            "digits",
-            "npoint",
-            "expanded",
-        )
-    ]
-    return df.withColumns({out: rendered}).drop(*scratch)
+
+
+_PER_TEST_COLUMNS = (
+    "package",
+    "test_name",
+    "date_dir",
+    "ns_per_op",
+    "allocs_per_op",
+    "bytes_per_op",
+    "mb_per_s",
+)
+# one '"<date dir>":{"N":..,"A":..,"B":..,"M":..}' member per fact row
+_ENTRY_SQL = (
+    """concat('"', date_dir, '":{"N":', CAST(ns_per_op AS STRING),"""
+    """ ',"A":', CAST(allocs_per_op AS STRING),"""
+    """ ',"B":', CAST(bytes_per_op AS STRING), ',"M":', _m_go, '}') AS entry"""
+)
+_DOC_SQL = "concat('{', concat_ws(',', sort_array(collect_list(entry))), '}') AS json"
 
 
 def per_test_json(fact: DataFrame) -> DataFrame:
@@ -281,73 +272,45 @@ def per_test_json(fact: DataFrame) -> DataFrame:
     The M rendering rides ``with_go_number`` (the staged twin of
     ``_go_number``): the single-expression form overflows janino's
     64 KB method limit and drops the whole projection to interpreted
-    execution — see with_go_number's docstring."""
+    execution — see with_go_number's docstring. Entries are sorted per
+    document (``sort_array``), so the input needs no order; a fact
+    clustered on (package, test_name), as ``build_fact_table`` leaves
+    it, needs no shuffle for the aggregation."""
     staged = with_go_number(
-        fact.select(
-            "package",
-            "test_name",
-            "date_dir",
-            "ns_per_op",
-            "allocs_per_op",
-            "bytes_per_op",
-            "mb_per_s",
-        ),
-        F.col("mb_per_s"),
-        "_m_go",
-    )
-    entry = F.concat(
-        F.lit('"'),
-        F.col("date_dir"),
-        F.lit('":{"N":'),
-        F.col("ns_per_op").cast("string"),
-        F.lit(',"A":'),
-        F.col("allocs_per_op").cast("string"),
-        F.lit(',"B":'),
-        F.col("bytes_per_op").cast("string"),
-        F.lit(',"M":'),
-        F.col("_m_go"),
-        F.lit("}"),
+        fact.selectExpr(*_PER_TEST_COLUMNS), F.col("mb_per_s"), "_m_go"
     )
     return (
-        staged.select("package", "test_name", entry.alias("entry"))
+        staged.selectExpr("package", "test_name", _ENTRY_SQL)
         .groupBy("package", "test_name")
-        .agg(
-            F.concat(
-                F.lit("{"),
-                F.concat_ws(",", F.sort_array(F.collect_list("entry"))),
-                F.lit("}"),
-            ).alias("json")
-        )
+        .agg(F.expr(_DOC_SQL))
     )
+
+
+# {"pkg":[tests...],...} from the collected (package, test_name) pairs:
+# one '"pkg":[...]' member per distinct package, tests sorted within it,
+# members sorted as whole strings.
+_CATALOG_SQL = (
+    "concat('{', concat_ws(',', sort_array(transform("
+    "array_distinct(transform(pairs, p -> p.package)),"
+    " pkg -> concat('\"', pkg, '\":', to_json(sort_array(transform("
+    "filter(pairs, p -> p.package = pkg), p -> p.test_name))))))), '}') AS json"
+)
 
 
 def catalog_json_df(fact: DataFrame) -> DataFrame:
     """The single ``test_names.json`` document as a one-row DataFrame
     ``(json)``: ``{pkg: [test,...]}`` with both levels sorted (the
     reference's order is unspecified Go map iteration; we canonicalize
-    — SURVEY §2.4 A2). The document is assembled executor-side by two
-    hash aggregations; only the final one-row JSON ever moves."""
-    return (
-        fact.select("package", "test_name")
-        .distinct()
-        .groupBy("package")
-        .agg(F.sort_array(F.collect_list("test_name")).alias("tests"))
-        .select(
-            F.concat(
-                F.lit('"'),
-                F.col("package"),
-                F.lit('":'),
-                F.to_json(F.col("tests")),
-            ).alias("entry")
-        )
-        .agg(
-            F.concat(
-                F.lit("{"),
-                F.concat_ws(",", F.sort_array(F.collect_list("entry"))),
-                F.lit("}"),
-            ).alias("json")
-        )
-    )
+    — SURVEY §2.4 A2).
+
+    One aggregation: ``collect_set(struct(package, test_name))``, partial
+    per partition, then one projection renders the document. Its cost
+    is O(packages × tests) in the one final task (each package filters
+    the whole pair set); any single-document rendering holds the whole
+    catalog in that task. Only the one-row JSON leaves the executors."""
+    return fact.agg(
+        F.expr("collect_set(struct(package, test_name)) AS pairs")
+    ).selectExpr(_CATALOG_SQL)
 
 
 def catalog_json(fact: DataFrame) -> str:

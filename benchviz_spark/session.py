@@ -24,6 +24,16 @@ but every knob is chosen for cluster-scale behavior first:
   parent directory is prepended to the workers' ``PYTHONPATH``
   (``spark.executorEnv.PYTHONPATH``), so pandas-UDF, codec and streaming
   queries do not depend on being launched from the repository root.
+- The file-stream-sink metadata probe logs at ERROR only. A batch file
+  read of ONE path first checks it for a ``_spark_metadata`` directory;
+  the bench-log reader's path is a date-dir glob, which is no literal
+  path, so every fact build logged a WARN with a full
+  ``FileNotFoundException`` stack trace before reading as usual. The
+  probe itself cannot be skipped without a conf
+  (``spark.sql.streaming.fileStreamSink.ignoreMetadata``, which would
+  also stop reading real sink outputs through their log) or a second
+  path, so only that one logger is quieted; its other messages are
+  "assume no metadata" fallbacks of the same kind.
 """
 
 from __future__ import annotations
@@ -36,6 +46,12 @@ from pyspark.sql import SparkSession
 # package), which Python workers need on their path
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _WORKER_PATH_KEY = "spark.executorEnv.PYTHONPATH"
+# the file-stream-sink metadata probe (see module docstring), under its
+# Spark 4.1 and its earlier class name
+_QUIET_LOGGERS = (
+    "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink",
+    "org.apache.spark.sql.execution.streaming.FileStreamSink",
+)
 
 
 def get_spark(
@@ -93,4 +109,7 @@ def get_spark(
 
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    log4j = spark._jvm.org.apache.logging.log4j
+    for logger in _QUIET_LOGGERS:
+        log4j.core.config.Configurator.setLevel(logger, log4j.Level.ERROR)
     return spark

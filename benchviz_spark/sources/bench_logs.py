@@ -23,9 +23,8 @@ and Spark splits the file *list* across executors.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window as W
 
 # Reference patterns, verbatim semantics (not verbatim code):
 DATE_DIR_PATTERN = "[0-9]{2}-[0-9]{2}-[0-9]{4}"
@@ -71,6 +70,50 @@ REFERENCE_PACKAGES = (
 _DATE_DIR_GLOB = "*[0-9][0-9]-[0-9][0-9]-[0-9][0-9][0-9][0-9]*"
 
 
+# The projections below are Spark SQL text: each string is parsed in the
+# JVM in one call, where the same tree built from ``F.*`` Columns costs
+# about three py4j round trips per function call (~1,100 for the fact
+# table and per-test JSON plans). Only module constants are spliced into this text; a
+# caller's values (the package whitelist) stay Column expressions.
+
+
+def _sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal (backslash and quote escaped)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+# file -> (source_file, package, value); the second item reads the
+# first as a lateral column alias. Files sitting directly under
+# cockroach/ have no package dir and are never visited by the reference
+# walker (file_generator.go:144): their package is '' and they drop.
+_FILE_SQL = (
+    "input_file_name() AS source_file",
+    f"regexp_extract(source_file, {_sql_str(r'/cockroach/(.+)/[^/]+$')}, 1)"
+    " AS package",
+    "value",
+)
+_LINES_SQL = (
+    "source_file",
+    "package",
+    f"posexplode(split(value, {_sql_str(chr(10))})) AS (line_pos, line)",
+)
+
+
+def _file_lines(files: DataFrame, packages: tuple[str, ...] | None) -> DataFrame:
+    """A ``wholetext`` text read (one row per file, batch or stream) ->
+    (source_file, package, line_pos, line), restricted to ``packages``
+    unless it is None."""
+    lines = files.selectExpr(*_FILE_SQL).filter("package != ''")
+    lines = lines.selectExpr(*_LINES_SQL)
+    if packages is not None:
+        # Column.isin semantics; the names cross py4j as ONE list, where
+        # PySpark's isin makes a lit() call (3 round trips) per name
+        lines = lines.filter(
+            Column(F.col("package")._jc.isInCollection(list(packages)))
+        )
+    return lines
+
+
 def read_bench_lines(
     spark: SparkSession,
     samples_root: str,
@@ -90,27 +133,41 @@ def read_bench_lines(
     ``packages`` reproduces the reference whitelist (F4, main.go:23-25);
     pass ``None`` to ingest every package dir.
     """
-    lines = (
+    files = (
         spark.read.option("recursiveFileLookup", "true")
         .option("pathGlobFilter", "*test.stdout*")
         .text(f"{samples_root}/{_DATE_DIR_GLOB}/cockroach", wholetext=True)
-        .withColumn("source_file", F.input_file_name())
-        .withColumn(
-            "package",
-            F.regexp_extract(F.col("source_file"), r"/cockroach/(.+)/[^/]+$", 1),
-        )
-        # files sitting directly under cockroach/ have no package dir and
-        # are never visited by the reference walker (file_generator.go:144)
-        .filter(F.col("package") != "")
-        .select(
-            "source_file",
-            "package",
-            F.posexplode(F.split(F.col("value"), "\n")).alias("line_pos", "line"),
-        )
     )
-    if packages is not None:
-        lines = lines.filter(F.col("package").isin(list(packages)))
-    return lines
+    return _file_lines(files, packages)
+
+
+def _metric_sql(pattern: str, typ: str, name: str) -> str:
+    # no-match regexp_extract yields '' — try_cast turns that into null
+    # (ANSI mode would throw), coalesce applies the Go zero-value default.
+    return (
+        f"coalesce(try_cast(regexp_extract(line, {_sql_str(pattern)}, 1) AS {typ}),"
+        f" CAST(0 AS {typ})) AS {name}"
+    )
+
+
+_VALID_LINE_SQL = "startswith(line, 'Benchmark') AND NOT line RLIKE 'FAIL'"
+_PARSE_SQL = (
+    f"to_date(regexp_extract(source_file, {_sql_str(f'({DATE_DIR_PATTERN})')}, 1),"
+    " 'dd-MM-yyyy') AS run_date",
+    # the RAW directory-name segment: the reference keys its serving
+    # JSON by dataDirName verbatim (file_generator.go:167), so quirky
+    # dirs like x01-01-2016y must survive to the serving edge.
+    "regexp_extract(source_file,"
+    f" {_sql_str(f'/([^/]*{DATE_DIR_PATTERN}[^/]*)/cockroach/')}, 1) AS date_dir",
+    "package",
+    f"trim(split(line, {_sql_str(chr(9))})[0]) AS test_name",
+    _metric_sql(NS_PER_OP_RE, "long", "ns_per_op"),
+    _metric_sql(ALLOCS_RE, "long", "allocs_per_op"),
+    _metric_sql(BYTES_RE, "long", "bytes_per_op"),
+    _metric_sql(MBPS_RE, "double", "mb_per_s"),
+    "source_file",
+    "line_pos",
+)
 
 
 def parse_bench_lines(lines: DataFrame) -> DataFrame:
@@ -119,36 +176,15 @@ def parse_bench_lines(lines: DataFrame) -> DataFrame:
     All parsing is native Catalyst expressions (regexp_extract / split /
     trim / cast) — no Python in the hot path. Missing metrics become 0,
     not null (Go zero-value semantics, file_generator.go:85-104).
+    Stateless, so it runs unchanged on a streaming DataFrame.
     """
-    is_valid = F.col("line").startswith("Benchmark") & ~F.col("line").rlike("FAIL")
+    return lines.filter(_VALID_LINE_SQL).selectExpr(*_PARSE_SQL)
 
-    def metric(pattern: str, typ: str) -> F.Column:
-        # no-match regexp_extract yields '' — try_cast turns that into
-        # null (ANSI mode would throw), coalesce applies the Go
-        # zero-value default.
-        extracted = F.regexp_extract(F.col("line"), pattern, 1)
-        return F.coalesce(extracted.try_cast(typ), F.lit(0).cast(typ))
 
-    return lines.filter(is_valid).select(
-        F.to_date(
-            F.regexp_extract(F.col("source_file"), f"({DATE_DIR_PATTERN})", 1),
-            "dd-MM-yyyy",
-        ).alias("run_date"),
-        # the RAW directory-name segment: the reference keys its serving
-        # JSON by dataDirName verbatim (file_generator.go:167), so quirky
-        # dirs like x01-01-2016y must survive to the serving edge.
-        F.regexp_extract(
-            F.col("source_file"), f"/([^/]*{DATE_DIR_PATTERN}[^/]*)/cockroach/", 1
-        ).alias("date_dir"),
-        "package",
-        F.trim(F.split(F.col("line"), "\t").getItem(0)).alias("test_name"),
-        metric(NS_PER_OP_RE, "long").alias("ns_per_op"),
-        metric(ALLOCS_RE, "long").alias("allocs_per_op"),
-        metric(BYTES_RE, "long").alias("bytes_per_op"),
-        metric(MBPS_RE, "double").alias("mb_per_s"),
-        "source_file",
-        "line_pos",
-    )
+_LWW_RANK_SQL = (
+    "row_number() OVER (PARTITION BY package, test_name, date_dir"
+    " ORDER BY source_file DESC, line_pos DESC) AS __rn"
+)
 
 
 def dedup_last_write_wins(parsed: DataFrame) -> DataFrame:
@@ -158,13 +194,10 @@ def dedup_last_write_wins(parsed: DataFrame) -> DataFrame:
     by name), then line position asc — so the winner is the max
     (source_file, line_pos). A window row_number keeps it fully
     distributed and deterministic."""
-    w = W.partitionBy("package", "test_name", "date_dir").orderBy(
-        F.col("source_file").desc(), F.col("line_pos").desc()
-    )
     return (
-        parsed.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(*FACT_COLUMNS)
+        parsed.selectExpr("*", _LWW_RANK_SQL)
+        .filter("__rn = 1")
+        .selectExpr(*FACT_COLUMNS)
     )
 
 
@@ -176,23 +209,21 @@ def build_fact_table(
     """Full ingest: scan -> parse -> LWW dedup -> bench_results fact table
     (FIXTURES.md §2 schema), laid out for serving.
 
-    The table ends range-partitioned on (package, test_name) and sorted
-    within partitions by (package, test_name, run_date): its physical
-    layout is the serving layout. A cached fact then reports that
-    partitioning and ordering, so the per-test aggregation and the
-    catalog's ``distinct`` need no shuffle of their own, and the cached
-    batches' min/max statistics let a point lookup's filter skip every
-    batch but the few that hold its test (the lookup's one-job gather
-    itself does not depend on this layout).
-
-    The range exchange sits AFTER the LWW window, which keeps its own
-    hash shuffle: there the RangePartitioner's sampling job reads the
-    materialized shuffle output. Placed before the window instead, the
-    sampler re-runs the whole scan and parse."""
-    return (
-        dedup_last_write_wins(
-            parse_bench_lines(read_bench_lines(spark, samples_root, packages))
-        )
-        .repartitionByRange("package", "test_name")
-        .sortWithinPartitions("package", "test_name", "run_date")
-    )
+    ONE shuffle: the parsed rows are hash-partitioned on
+    (package, test_name) ahead of the LWW window. That partitioning
+    already satisfies the window's (package, test_name, date_dir) key,
+    so the window adds no exchange, and the table ends hash-clustered on
+    (package, test_name), each partition sorted by it (the window's own
+    sort). A cached fact then reports that partitioning: the per-test
+    aggregation, the index listing's ``distinct`` and the regression
+    windows (all keyed by (package, test_name) or a superset) need no
+    shuffle of their own. Where a partition spans several cached
+    batches, their min/max statistics let a point
+    lookup's filter skip the batches that do not hold its test (a
+    partition of one batch spans every key, and is scanned).
+    Point lookups gather and sort their own rows, and ``per_test_json``
+    sorts its own entries, so the table needs no global order (a range
+    layout would cost a sampling job over the LWW shuffle output and a
+    second exchange)."""
+    parsed = parse_bench_lines(read_bench_lines(spark, samples_root, packages))
+    return dedup_last_write_wins(parsed.repartition("package", "test_name"))

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from benchviz_spark.serving.json_sink import per_test_json, write_serving_tree
 from benchviz_spark.sources.bench_logs import (
     _DATE_DIR_GLOB,
+    _file_lines,
     REFERENCE_PACKAGES,
     dedup_last_write_wins,
     parse_bench_lines,
@@ -42,26 +43,13 @@ def read_bench_lines_stream(
     """Streaming twin of read_bench_lines: same glob, same filters, one
     row per (file, line) with provenance. maxFilesPerTrigger bounds
     per-batch work so a backlogged tree drains in steady increments."""
-    lines = (
+    files = (
         spark.readStream.option("recursiveFileLookup", "true")
         .option("pathGlobFilter", "*test.stdout*")
         .option("maxFilesPerTrigger", "64")
         .text(f"{samples_root}/{_DATE_DIR_GLOB}/cockroach", wholetext=True)
-        .withColumn("source_file", F.input_file_name())
-        .withColumn(
-            "package",
-            F.regexp_extract(F.col("source_file"), r"/cockroach/(.+)/[^/]+$", 1),
-        )
-        .filter(F.col("package") != "")
-        .select(
-            "source_file",
-            "package",
-            F.posexplode(F.split(F.col("value"), "\n")).alias("line_pos", "line"),
-        )
     )
-    if packages is not None:
-        lines = lines.filter(F.col("package").isin(list(packages)))
-    return lines
+    return _file_lines(files, packages)
 
 
 def run_streaming_pipeline(

@@ -264,6 +264,132 @@ def test_pipeline_end_to_end(spark, sample_tree, tmp_path):
     assert len(series) == 1 and series[0].ns_per_op == 1328086
 
 
+def _snapshot(root: str) -> dict:
+    """{relative path: bytes} of every file under ``root``."""
+    out = {}
+    for dirpath, _, files in os.walk(root):
+        for fname in files:
+            p = os.path.join(dirpath, fname)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, root)] = fh.read()
+    return out
+
+
+def _all_filtered_tree(root: str) -> str:
+    """A tree every ingest filter empties: a non-whitelisted package, a
+    non-matching file name, a file directly under cockroach/, a file of
+    FAIL lines only, and a whitelisted file under a non-date dir."""
+    _write(root, "01-01-2015", "notlisted", "x.test.stdout", [CANONICAL_LINE])
+    _write(root, "01-01-2015", "sql", "readme.txt", [CANONICAL_LINE])
+    _write(root, "01-01-2015", "", "top.test.stdout", [CANONICAL_LINE])
+    _write(root, "01-01-2015", "kv", "fail.test.stdout",
+           ["--- FAIL: BenchmarkBar", "BenchmarkBar-8 \t FAIL"])
+    _write(root, "notadate", "sql", "sql.test.stdout", [CANONICAL_LINE])
+    return root
+
+
+def _one_row_tree(root: str) -> str:
+    _write(root, "01-01-2015", "sql", "sql.test.stdout", [CANONICAL_LINE])
+    return root
+
+
+def test_serving_tree_is_partition_and_aqe_invariant(spark, sample_tree, tmp_path):
+    """run_pipeline writes the same bytes (every per-test document and
+    test_names.json) under 1, 7 and 32 shuffle partitions, with AQE on
+    and off, for the edge-case tree, a tree every filter empties
+    (catalog ``{}``, no documents) and a one-row tree."""
+    trees = {
+        "sample": sample_tree,
+        "all_filtered": _all_filtered_tree(str(tmp_path / "all_filtered")),
+        "one_row": _one_row_tree(str(tmp_path / "one_row")),
+    }
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    saved = [spark.conf.get(k) for k in keys]
+    snaps: dict = {}
+    try:
+        for partitions in ("1", "7", "32"):
+            for aqe in ("true", "false"):
+                spark.conf.set(keys[0], partitions)
+                spark.conf.set(keys[1], aqe)
+                for name, root in trees.items():
+                    out = str(tmp_path / f"out_{name}_{partitions}_{aqe}")
+                    run_pipeline(spark, root, out).unpersist()
+                    snaps.setdefault(name, []).append(((partitions, aqe), _snapshot(out)))
+    finally:
+        for k, v in zip(keys, saved):
+            spark.conf.set(k, v)
+    for name, runs in snaps.items():
+        first = runs[0][1]
+        for conf, snap in runs[1:]:
+            assert snap == first, (name, conf)
+    assert snaps["all_filtered"][0][1] == {"test_names.json": b"{}"}
+    one_row = snaps["one_row"][0][1]
+    assert one_row == {
+        "test_names.json": b'{"sql":["BenchmarkBank2_Cockroach-8"]}',
+        "sql/BenchmarkBank2_Cockroach-8.json":
+            b'{"01-01-2015":{"N":1328086,"A":2317,"B":183965,"M":0}}',
+    }
+    sample = snaps["sample"][0][1]
+    assert json.loads(sample["test_names.json"])["kv"] == [
+        "BenchmarkDup-8", "BenchmarkLoose-8"
+    ]
+    assert sample["kv/BenchmarkDup-8.json"] == (
+        b'{"15-12-2015":{"N":222,"A":0,"B":0,"M":0}}'
+    )
+
+
+def _py4j_commands(monkeypatch, fn):
+    """(fn(), py4j commands the driver sent while it ran). py4j's
+    object-release messages are not counted: they follow Python garbage
+    collection, not the work ``fn`` does."""
+    from py4j.clientserver import ClientServerConnection
+
+    sent = [0]
+    send = ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):
+            sent[0] += 1
+        return send(self, command, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(ClientServerConnection, "send_command", counting)
+        result = fn()
+    return result, sent[0]
+
+
+def test_plan_construction_py4j_round_trips_are_bounded(spark, sample_tree, monkeypatch):
+    """Building the fact table's plan and the per-test JSON plan costs a
+    bounded number of py4j round trips. The projections are SQL text,
+    parsed in the JVM in one call each; built from ``F.*`` Columns they
+    cost ~3 round trips per function call (389 for ``build_fact_table``
+    and 702 for ``per_test_json`` before). Nothing runs a job here."""
+    build_fact_table(spark, sample_tree)  # first-use JVM lookups
+    fact, n_build = _py4j_commands(
+        monkeypatch, lambda: build_fact_table(spark, sample_tree)
+    )
+    _, n_json = _py4j_commands(monkeypatch, lambda: per_test_json(fact))
+    assert n_build <= 97, n_build
+    assert n_json <= 105, n_json
+
+
+def test_per_test_json_compiles_without_codegen_fallback(spark, fact):
+    """With codegen fallback off, a whole-stage method over janino's
+    64 KB limit raises instead of silently running interpreted: the
+    staged M rendering must compile, and render the same documents."""
+    key = "spark.sql.codegen.fallback"
+    expected = sorted(map(tuple, per_test_json(fact).collect()))
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        got = sorted(map(tuple, per_test_json(fact).collect()))
+    finally:
+        spark.conf.set(key, saved)
+    assert got == expected
+    assert ("sql", "BenchmarkScan1000_Cockroach-16",
+            '{"01-01-2015":{"N":2000000,"A":10,"B":1024,"M":12.5}}') in got
+
+
 def _collect_counting_jobs(spark, group: str, df) -> tuple[list, int]:
     """``df``'s rows and the number of Spark jobs collecting them ran."""
     sc = spark.sparkContext

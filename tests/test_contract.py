@@ -88,6 +88,15 @@ def test_session_turns_off_dataframe_debugging(spark):
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
 
 
+def test_session_quiets_the_file_stream_sink_probe(spark):
+    """A get_spark session logs the file-stream-sink metadata probe of the
+    bench-log glob (a FileNotFoundException WARN per fact build) only at
+    ERROR."""
+    log4j = spark._jvm.org.apache.logging.log4j
+    probe = "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink"
+    assert log4j.LogManager.getLogger(probe).getLevel().toString() == "ERROR"
+
+
 _ANY_CWD_SCRIPT = """
 import sys
 sys.path.insert(0, sys.argv[1])

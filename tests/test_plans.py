@@ -542,11 +542,13 @@ def test_serving_json_single_aggregation_no_collect(spark):
     plan = formatted_plan(df)
     # exactly one partial+final pair for the document assembly (the
     # collect_list rides ObjectHashAggregate). The plan holds two
-    # exchanges: the ingest's LWW window (hash) and the fact table's
-    # (package, test_name) clustering (range). The aggregation and the
-    # output orderBy on the same key both reuse the clustering
+    # exchanges: the fact table's hash clustering on (package,
+    # test_name), which the LWW window and the aggregation both reuse,
+    # and the range exchange of the output orderBy
     assert plan.count("ObjectHashAggregate (") == 2, plan
-    assert plan.count("Exchange (") <= 3, plan
+    assert plan.count("Exchange (") == 2, plan
+    assert len(re.findall(r"hashpartitioning\(package#\d+, test_name#\d+, \d+\)", plan)) == 1, plan
+    assert plan.count("rangepartitioning(") == 1, plan
     assert "SortAggregate" not in plan, plan
     assert "CollectLimit" not in plan, plan
 
@@ -594,6 +596,45 @@ def _outside_cache(plan: str) -> list[str]:
     return out
 
 
+def test_cached_fact_has_one_hash_exchange(spark):
+    """The fact table is laid out by ONE shuffle: hash on (package,
+    test_name) ahead of the LWW window, which that partitioning already
+    satisfies. No range exchange (and so no sampling job) remains."""
+    fact = _cached_demo_fact(spark)
+    try:
+        plan = formatted_plan(fact)
+        final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+        assert len(re.findall(r"\bExchange \(\d+\)", final)) == 1, plan
+        exchanges = re.findall(r"^Arguments: (\w+partitioning\([^)]*\))", plan, re.M)
+        assert exchanges and all(
+            re.fullmatch(r"hashpartitioning\(package#\d+, test_name#\d+, \d+\)", e)
+            for e in exchanges
+        ), plan
+        assert "rangepartitioning" not in plan, plan
+    finally:
+        fact.unpersist()
+
+
+def test_standing_token_pass_shingles_above_the_spread(spark):
+    """The standing token pass spreads the raw rows, then shingles: the
+    shingle projection (zip_with over token slices) runs above the
+    round-robin exchange, in every task, and nothing below it shingles."""
+    from benchviz_spark.operators.curation import _standing_token_pass
+
+    plan = formatted_plan(_standing_token_pass(spark, load_table(spark, SF_DIR, "documents")))
+    tree = plan.split("\n\n")[0].splitlines()
+    node = lambda line: re.search(r"(\w+) \((\d+)\)$", line)  # noqa: E731
+    nodes = [(i, node(l).group(1), node(l).group(2)) for i, l in enumerate(tree) if node(l)]
+    details = {
+        m.group(1): m.group(2)
+        for m in re.finditer(r"^\((\d+)\) [^\n]*\n(.*?)(?=\n\n|\Z)", plan, re.M | re.S)
+    }
+    exchange = [i for i, name, _ in nodes if name == "Exchange"]
+    assert len(exchange) == 1 and "RoundRobinPartitioning" in plan, plan
+    shingling = [i for i, _, n in nodes if "zip_with" in details.get(n, "")]
+    assert shingling and all(i < exchange[0] for i in shingling), plan
+
+
 def test_point_lookup_over_clustered_cache_gathers_without_exchange(spark):
     """point_lookup gathers its rows instead of sorting globally: over the
     cached fact the plan has no Exchange, one ``Coalesce 1``, and its only
@@ -638,7 +679,7 @@ def test_compare_over_clustered_cache_needs_no_exchange(spark):
 
 def test_per_test_json_over_clustered_cache_adds_no_exchange(spark):
     """The per-test aggregation is keyed (package, test_name), which the
-    cached fact's range partitioning already satisfies."""
+    cached fact's hash partitioning already satisfies."""
     from benchviz_spark.serving.json_sink import per_test_json
 
     fact = _cached_demo_fact(spark)
