@@ -53,7 +53,7 @@ from benchviz_spark.operators.sampling import (
     hash_bucket,
 )
 from benchviz_spark.registry import query
-from benchviz_spark.sources.tables import load_table
+from benchviz_spark.sources.tables import load_table, spread
 
 MIN_CHARS = 100  # quality gate: drop fragments below this length
 
@@ -1433,7 +1433,6 @@ def _standing_token_pass(spark: SparkSession, docs: DataFrame) -> DataFrame:
     per-document aggregate, so the flags of the standing docs do not
     depend on which other docs are scored alongside them."""
     from benchviz_spark.operators.dedup import _INCR_SEEN_RE, _shingles
-    from benchviz_spark.sources.tables import spread
 
     pre = docs.filter(
         F.col("source").rlike(_INCR_SEEN_RE) | eval_split(F.col("doc_id"))
@@ -1631,9 +1630,12 @@ def admit_vs_standing(
     source, n_chars); probed is the gated rows with their probe columns
     (fp, hs, n_shingles, n_contaminated, buckets).
 
-    - hygiene: eval carve + length filters; one mapInPandas pass counts
-      contamination against the eval-gram set and computes the band
-      keys (``dedup._band_keys_vec``). The ratio flag is Catalyst
+    - hygiene: eval carve + length filters, then ``spread`` (always a
+      repartition on a stream) so the shingling projection and the probe
+      run in every task; one mapInPandas pass counts contamination
+      against the eval-gram set and computes the band keys
+      (``dedup._band_keys_vec``). ``docs`` must be exchange-free (see
+      ``spread``). The ratio flag is Catalyst
       F.round (HALF_UP, as the oracle), inside when(n_shingles > 0):
       ANSI mode raises on /0 and a guard conjunct does not protect a
       sibling conjunct.
@@ -1674,29 +1676,22 @@ def admit_vs_standing(
     )
 
     toks = F.split(_norm_text(F.col("text")), " ")
-    # Unconditional repartition to cluster parallelism BEFORE the heavy
-    # projection: the shingling expressions and probe() below are the
-    # compute wall, and a single-file input arrives as ONE partition.
-    # Not tables.spread: on a stream its .rdd probe raises and the
-    # input would pass through unchanged, onto one core.
-    gated = (
-        docs.filter(~F.col("source").rlike(_INCR_SEEN_RE))
-        .filter(
+    gated = spread(
+        spark,
+        docs.filter(~F.col("source").rlike(_INCR_SEEN_RE)).filter(
             (~eval_split(F.col("doc_id"))) & (F.col("n_chars") >= MIN_CHARS)
-        )
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select(
-            "doc_id",
-            "lang",
-            "source",
-            "n_chars",
-            F.md5(_norm_text(F.col("text"))).alias("fp"),
-            _shingles(toks, NGRAM).alias("g4"),
-            _shingles(toks, 3).alias("g3"),
-            F.array_distinct(
-                F.transform(_shingles(toks, 3), lambda s: F.xxhash64(s))
-            ).alias("hs"),
-        )
+        ),
+    ).select(
+        "doc_id",
+        "lang",
+        "source",
+        "n_chars",
+        F.md5(_norm_text(F.col("text"))).alias("fp"),
+        _shingles(toks, NGRAM).alias("g4"),
+        _shingles(toks, 3).alias("g3"),
+        F.array_distinct(
+            F.transform(_shingles(toks, 3), lambda s: F.xxhash64(s))
+        ).alias("hs"),
     )
 
     def probe(batches):

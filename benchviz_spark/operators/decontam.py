@@ -137,13 +137,14 @@ def decontam_eval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     a contamination fraction. Documents with zero overlap are absent
     (they need no decontamination action); callers filter at
     ``THRESHOLD`` or remove matched spans."""
-    # consumed twice (eval side + corpus postings): materialize once,
-    # spread across cores — without this the normalize+shingle chain
-    # runs per consumer on a single-split scan (same pattern as
-    # dedup.hashed_shingled_documents(materialize=True))
-    sh = spread(
-        spark, shingled_documents(spark, sf_dir, n=NGRAM)
-    ).localCheckpoint(eager=True).filter(F.size("shingles") > 0)
+    # consumed twice (eval side + corpus postings): materialize once —
+    # lazily the normalize+shingle chain runs per consumer (same
+    # pattern as dedup.hashed_shingled_documents)
+    sh = (
+        shingled_documents(spark, sf_dir, n=NGRAM)
+        .localCheckpoint(eager=True)
+        .filter(F.size("shingles") > 0)
+    )
     ev = (
         sh.filter(eval_split(F.col("doc_id")))
         .select(F.explode("shingles").alias("g"))
@@ -281,13 +282,11 @@ def decontam_fuzzy_eval_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     proving the posting formulation exact."""
     from benchviz_spark.operators.dedup import hashed_shingled_documents
 
-    # materialize=True: the shingle table feeds BOTH the eval and the
-    # corpus posting sides — without the checkpoint each side re-runs
-    # the whole normalize+shingle+hash chain (the dedup pair queries'
-    # documented dominant cost)
-    sh = hashed_shingled_documents(spark, sf_dir, 3, materialize=True).filter(
-        F.size("hs") > 0
-    )
+    # checkpointed: the shingle table feeds BOTH the eval and the
+    # corpus posting sides — lazily each side would re-run the whole
+    # normalize+shingle+hash chain (the dedup pair queries' documented
+    # dominant cost)
+    sh = hashed_shingled_documents(spark, sf_dir, 3).filter(F.size("hs") > 0)
     hashed = sh.select(
         "doc_id",
         F.size("hs").alias("n_sh"),
@@ -412,8 +411,8 @@ def decontam_substring_hits(
     # projection to DISJOINT doc_id sets, so normalize+window+hash
     # compute is never duplicated — each side evaluates only its own
     # rows — unlike the shingle helpers, whose pair detectors consume
-    # the SAME rows three times (hashed_shingled_documents
-    # materialize=True). The only shared cost is the second parquet
+    # the SAME rows three times (hashed_shingled_documents'
+    # checkpoint). The only shared cost is the second parquet
     # scan, and materializing the full normalized corpus to save it
     # measured 0.9 -> 2.0 s at sf0.1 (and would be a corpus-sized
     # block-manager write at 100 TB).

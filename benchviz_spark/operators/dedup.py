@@ -132,16 +132,25 @@ def shingled_documents(
     n: int = 3,
     docs: DataFrame | None = None,
 ) -> DataFrame:
-    """documents -> (doc_id, shingles array<string>). Narrow (no shuffle).
+    """documents -> (doc_id, shingles array<string>): THE shingle pass
+    every dedup, decontamination and novelty operator starts from.
 
-    ``docs`` overrides the table scan with a pre-filtered relation —
-    decontam's span excision shingles ONLY the eval carve this way (a
-    semi join after the fact would still shingle the whole lake; a
-    filter pushed below the projection is carve-sized work)."""
+    The input rows are ``spread`` before the normalize/split/shingle
+    projection, so the one round-robin exchange (on a few-split scan or
+    a stream) carries (doc_id, text) and the shingling runs in every
+    task; callers never spread the result again.
+
+    ``docs`` overrides the table scan with a pre-filtered relation or a
+    stream — decontam's span excision shingles ONLY the eval carve this
+    way (a semi join after the fact would still shingle the whole lake;
+    a filter pushed below the projection is carve-sized work). It must
+    be exchange-free (see ``spread``)."""
     if docs is None:
         docs = load_table(spark, sf_dir, "documents")
     toks = F.split(_norm_text(F.col("text")), " ")
-    return docs.select("doc_id", _shingles(toks, n).alias("shingles"))
+    return spread(spark, docs.select("doc_id", "text")).select(
+        "doc_id", _shingles(toks, n).alias("shingles")
+    )
 
 
 def hash_shingles(sh: DataFrame) -> DataFrame:
@@ -156,11 +165,7 @@ def hash_shingles(sh: DataFrame) -> DataFrame:
 
 
 def hashed_shingled_documents(
-    spark: SparkSession,
-    sf_dir: str,
-    n: int = 3,
-    materialize: bool = False,
-    docs: DataFrame | None = None,
+    spark: SparkSession, sf_dir: str, n: int = 3
 ) -> DataFrame:
     """documents -> (doc_id, hs array<long>): distinct shingles hashed to
     int64 ONCE, scan-side. Every downstream op (postings joins, minhash,
@@ -168,17 +173,14 @@ def hashed_shingled_documents(
     ~30-byte shingle strings, and evaluating xxhash64 once per shingle
     instead of once per (shingle x hash-function).
 
-    ``materialize=True`` spreads the scan across cores and
-    localCheckpoints the result: callers that consume the shingle table
-    MORE THAN ONCE in one plan (the pair detectors read it as postings
-    AND as both verification sides) otherwise re-run the whole
-    normalize+shingle chain per consumer — measured as the dominant
-    cost of the jaccard pair query. Single-consumer callers (minhash)
-    leave it lazy and pay no write."""
-    out = hash_shingles(shingled_documents(spark, sf_dir, n, docs=docs))
-    if materialize:
-        return spread(spark, out).localCheckpoint(eager=True)
-    return out
+    The spread shingle pass is hashed and localCheckpointed eagerly:
+    every caller consumes the table MORE THAN ONCE in one plan (the
+    pair detectors read it as postings AND as both verification sides),
+    and lazily each consumer would re-run the whole normalize+shingle
+    chain — measured as the dominant cost of the jaccard pair query."""
+    return hash_shingles(shingled_documents(spark, sf_dir, n)).localCheckpoint(
+        eager=True
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -305,9 +307,7 @@ def _build_ngram_jaccard_pairs(
     missed; rarity ordering makes that the already-degenerate tail.
     Default None keeps the operator fully exact (the oracle contract)."""
     t = 0.5
-    sh = hashed_shingled_documents(spark, sf_dir, materialize=True).filter(
-        F.size("hs") > 0
-    )
+    sh = hashed_shingled_documents(spark, sf_dir).filter(F.size("hs") > 0)
     postings = sh.select("doc_id", F.size("hs").alias("n_sh"), F.explode("hs").alias("h"))
     # global document frequency per shingle — vocabulary-sized: NO
     # broadcast hint (see docstring)
@@ -352,10 +352,7 @@ def _build_ngram_jaccard_pairs(
 # MinHash + LSH banding: the 100-TB fuzzy-dedup path.
 # ---------------------------------------------------------------------------
 def minhash_signatures(
-    spark: SparkSession,
-    sf_dir: str,
-    docs: DataFrame | None = None,
-    sh: DataFrame | None = None,
+    spark: SparkSession, sf_dir: str, sh: DataFrame | None = None
 ) -> DataFrame:
     """(doc_id, m0..m31): 32 minhash values per doc, computed as 32
     ``min()`` aggregates over the exploded shingle postings.
@@ -379,6 +376,11 @@ def minhash_signatures(
     once and running 32 map-side-combined min() aggregates evaluates
     shingling once and shuffles only 5k x 32 longs.
 
+    The default shingle source is ``shingled_documents``, spread before
+    it shingles, so the whole normalize+shingle+explode+md5+32-pmod
+    chain runs in every task of a one-split scan; the only other
+    exchange is the groupBy's.
+
     ``sh`` overrides the shingle source with an already-computed
     (doc_id, shingles) relation: a caller that also needs the shingle
     arrays for another structure (the admission-index build derives
@@ -387,13 +389,15 @@ def minhash_signatures(
     chain per consumer. Identical expressions either way.
     """
     if sh is None:
-        # spread() the shingle source: the one-split testdata scan would
-        # otherwise run the whole normalize+shingle+explode+md5+32-pmod
-        # chain below as a single task (the Exchange only comes at the
-        # groupBy) — no-op on a many-split production scan
-        sh = spread(spark, shingled_documents(spark, sf_dir, docs=docs))
-    sh = sh.filter(F.size("shingles") > 0)
-    postings = sh.select("doc_id", F.explode("shingles").alias("s"))
+        sh = shingled_documents(spark, sf_dir)
+    # explode_outer + a null filter (shingle arrays hold no nulls), not
+    # explode: from an inner explode Catalyst infers size(shingles) > 0
+    # and pushes it through the shingle projection and spread's
+    # exchange, so the whole shingle chain would run a second time in
+    # the scan's one task
+    postings = sh.select("doc_id", F.explode_outer("shingles").alias("s")).filter(
+        F.col("s").isNotNull()
+    )
     x = F.conv(F.substring(F.md5(F.col("s")), 1, 15), 16, 10).cast("long")
     base = F.pmod(x, F.lit(_MERSENNE31))
     mins = [
@@ -404,17 +408,14 @@ def minhash_signatures(
 
 
 def band_buckets(
-    spark: SparkSession,
-    sf_dir: str,
-    docs: DataFrame | None = None,
-    sh: DataFrame | None = None,
+    spark: SparkSession, sf_dir: str, sh: DataFrame | None = None
 ) -> DataFrame:
     """(doc_id, band, bucket): every document's N_BANDS LSH bucket
     memberships, keyed by the band's signature rows verbatim. Shared by
     the candidate join and the occupancy monitor so both see the
     identical bucketing. ``sh`` forwards a pre-computed (doc_id,
     shingles) relation to ``minhash_signatures`` (see there)."""
-    sig = minhash_signatures(spark, sf_dir, docs=docs, sh=sh)
+    sig = minhash_signatures(spark, sf_dir, sh=sh)
     bands = [
         F.struct(
             F.lit(i).alias("band"),
@@ -610,22 +611,15 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     only on LSH survivors, never all pairs. Recall vs the exact operator
     is pinned by tests/test_dedup.py, and the full pipeline is
     hash-checked cross-engine against ``_minhash_oracle``."""
-    # ONE spread+checkpointed shingle pass feeds the signature chain
-    # AND (via the xxhash projection) both verification sides — r15:
-    # the signatures and the hashed store each re-ran the
-    # normalize+split+shingle chain over the same documents. The
-    # hashed form is checkpointed too (the verification consumes it on
-    # BOTH join sides — lazy, each side would re-project per consumer).
-    sh_raw = spread(spark, shingled_documents(spark, sf_dir)).localCheckpoint(
-        eager=True
-    )
+    # ONE checkpointed shingle pass feeds the signature chain AND (via
+    # hash_shingles) both verification sides — r15: the signatures and
+    # the hashed store each re-ran the normalize+split+shingle chain
+    # over the same documents. The hashed form is checkpointed too (the
+    # verification consumes it on BOTH join sides — lazy, each side
+    # would re-project per consumer).
+    sh_raw = shingled_documents(spark, sf_dir).localCheckpoint(eager=True)
     cand = minhash_candidates(spark, sf_dir, sh=sh_raw)
-    sh = sh_raw.select(
-        "doc_id",
-        F.array_distinct(
-            F.transform(F.col("shingles"), lambda s: F.xxhash64(s))
-        ).alias("hs"),
-    ).localCheckpoint(eager=True)
+    sh = hash_shingles(sh_raw).localCheckpoint(eager=True)
     left = sh.select(F.col("doc_id").alias("left_id"), F.col("hs").alias("sa"))
     right = sh.select(F.col("doc_id").alias("right_id"), F.col("hs").alias("sb"))
     return (
@@ -1687,9 +1681,7 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrays, so every emitted pair is exact — the prefix filter only
     prunes, never approximates."""
     t = CONTAINMENT_T
-    sh = hashed_shingled_documents(spark, sf_dir, materialize=True).filter(
-        F.size("hs") > 0
-    )
+    sh = hashed_shingled_documents(spark, sf_dir).filter(F.size("hs") > 0)
     postings = sh.select(
         "doc_id", F.size("hs").alias("n_sh"), F.explode("hs").alias("h")
     )

@@ -1260,13 +1260,13 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle — 8-byte keys, never gram strings (the dedup-tier rule)."""
     from benchviz_spark.operators.dedup import hashed_shingled_documents
 
-    # materialize=True: the exploded gram relation feeds BOTH the
-    # first-owner aggregation and the join probe side — without the
-    # checkpoint the whole normalize+shingle+hash chain runs twice
-    # (the same two-consumer rule as the dedup pair detectors)
-    sh = hashed_shingled_documents(
-        spark, sf_dir, NOVELTY_N, materialize=True
-    ).filter(F.size("hs") > 0)
+    # checkpointed: the exploded gram relation feeds BOTH the
+    # first-owner aggregation and the join probe side — lazily the
+    # whole normalize+shingle+hash chain runs twice (the same
+    # two-consumer rule as the dedup pair detectors)
+    sh = hashed_shingled_documents(spark, sf_dir, NOVELTY_N).filter(
+        F.size("hs") > 0
+    )
     g = sh.select("doc_id", F.explode("hs").alias("h"))
     owner = g.groupBy("h").agg(F.min("doc_id").alias("first_doc"))
     novel = F.sum((F.col("first_doc") == F.col("doc_id")).cast("long"))

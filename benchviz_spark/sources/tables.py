@@ -69,7 +69,8 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def spread(spark: SparkSession, df: DataFrame) -> DataFrame:
     """Round-robin repartition a scan to cluster parallelism — but ONLY
-    when the source yields fewer partitions than cores.
+    when the source yields fewer partitions than cores. A stream is
+    always repartitioned.
 
     Why: the testdata parquet files are written as a single row group,
     so Spark's split planning cannot parallelize the scan and every
@@ -77,15 +78,26 @@ def spread(spark: SparkSession, df: DataFrame) -> DataFrame:
     explodes, array math) runs on ONE core. For compute-bound operators
     the fix is one linear shuffle of the raw rows before the heavy
     expressions — measured 4.5 s -> 1.0 s for the 4-gram shingle stage
-    at sf0.1. The partition-count guard makes this a no-op on a real
-    cluster, where a 100 TB table arrives as thousands of splits and a
-    forced repartition to #cores would *reduce* parallelism: the
-    repartition only fires in the degenerate few-splits case it exists
-    to fix.
+    at sf0.1. Spread the raw rows, not a projection of them: the
+    exchange must sit BELOW the heavy expressions, or they still run in
+    the scan's one task. The partition-count guard makes this a no-op
+    on a real cluster, where a 100 TB table arrives as thousands of
+    splits and a forced repartition to #cores would *reduce*
+    parallelism: the repartition only fires in the degenerate
+    few-splits case it exists to fix.
+
+    A stream has no partition count to probe, and a single-file
+    micro-batch arrives as one partition, so the repartition is
+    unconditional there.
+
+    Pass rows with no Exchange in their plan (a scan, filters and
+    projections over it): the partition-count probe plans ``df``, and
+    under adaptive execution planning an Exchange runs its shuffle
+    stages as jobs, at construction time.
     """
     try:
         n = spark.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < n:
+        if df.isStreaming or df.rdd.getNumPartitions() < n:
             return df.repartition(n)
         return df
     except Exception:

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from benchviz_spark.sources.tables import spread
+
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet as a stream. The file carries TIMESTAMP(NANOS);
@@ -299,14 +301,7 @@ def stream_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     with batch scans."""
     from benchviz_spark.operators.multimodal import document_dhashes
 
-    return document_dhashes(
-        # stateless repartition: a single-file micro-batch arrives as one
-        # partition and would serialize the compute-heavy stage onto one
-        # core (same sizing move as curation.admit_vs_standing)
-        read_documents_stream(spark, sf_dir)
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    return document_dhashes(read_documents_stream(spark, sf_dir))
 
 
 def stream_video_frame_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -320,14 +315,7 @@ def stream_video_frame_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     with Structured Streaming."""
     from benchviz_spark.operators.multimodal import document_frame_dhashes
 
-    return document_frame_dhashes(
-        # stateless repartition: a single-file micro-batch arrives as one
-        # partition and would serialize the compute-heavy stage onto one
-        # core (same sizing move as curation.admit_vs_standing)
-        read_documents_stream(spark, sf_dir)
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    return document_frame_dhashes(read_documents_stream(spark, sf_dir))
 
 
 def stream_classifier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -341,12 +329,7 @@ def stream_classifier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from benchviz_spark.operators.quality import classifier_projection
 
     return classifier_projection(
-        # stateless repartition: a single-file micro-batch arrives as one
-        # partition and would serialize the compute-heavy stage onto one
-        # core (same sizing move as curation.admit_vs_standing)
-        read_documents_stream(spark, sf_dir)
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
+        spread(spark, read_documents_stream(spark, sf_dir).select("doc_id", "text"))
     )
 
 
@@ -378,14 +361,9 @@ def stream_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda acc, t: acc
         + F.element_at(arr, (hash_bucket(t, "dsir:", DSIR_BUCKETS) + 1).cast("int")),
     )
-    return (
-        read_documents_stream(spark, sf_dir)
-        .select("doc_id", "source", "text")
-        # stateless repartition before the per-row token fold (same
-        # sizing move as curation.admit_vs_standing)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select("doc_id", "source", F.round(logw, 6).alias("log_weight"))
-    )
+    return spread(
+        spark, read_documents_stream(spark, sf_dir).select("doc_id", "source", "text")
+    ).select("doc_id", "source", F.round(logw, 6).alias("log_weight"))
 
 
 def stream_decontam_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -408,9 +386,7 @@ def stream_decontam_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         _seg_member_counts,
         eval_split,
     )
-    from benchviz_spark.operators.dedup import _norm_text, _shingles
-
-    from pyspark.sql import functions as F
+    from benchviz_spark.operators.dedup import shingled_documents
 
     ev_rows = (
         sw_shingled_eval(spark, sf_dir, NGRAM)
@@ -420,14 +396,11 @@ def stream_decontam_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )  # eval-carve bounded (MBs at any corpus scale), the frozen blocklist
     bc = spark.sparkContext.broadcast(frozenset(r.g for r in ev_rows))
 
-    toks = F.split(_norm_text(F.col("text")), " ")
-    stream = (
-        read_documents_stream(spark, sf_dir)
-        .filter(~eval_split(F.col("doc_id")))
-        # stateless repartition before the shingle projection + Python
-        # probe (same sizing move as curation.admit_vs_standing)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select("doc_id", _shingles(toks, NGRAM).alias("shingles"))
+    stream = shingled_documents(
+        spark,
+        sf_dir,
+        NGRAM,
+        docs=read_documents_stream(spark, sf_dir).filter(~eval_split(F.col("doc_id"))),
     )
 
     def probe(batches):

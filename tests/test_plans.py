@@ -615,13 +615,39 @@ def test_cached_fact_has_one_hash_exchange(spark):
         fact.unpersist()
 
 
-def test_standing_token_pass_shingles_above_the_spread(spark):
-    """The standing token pass spreads the raw rows, then shingles: the
-    shingle projection (zip_with over token slices) runs above the
-    round-robin exchange, in every task, and nothing below it shingles."""
-    from benchviz_spark.operators.curation import _standing_token_pass
+def _documents(spark):
+    return load_table(spark, SF_DIR, "documents")
 
-    plan = formatted_plan(_standing_token_pass(spark, load_table(spark, SF_DIR, "documents")))
+
+def _shingle_passes():
+    from benchviz_spark.operators.curation import _standing_token_pass
+    from benchviz_spark.operators.dedup import (
+        hash_shingles,
+        minhash_signatures,
+        shingled_documents,
+    )
+    from benchviz_spark.streaming.windows import sw_shingled_eval
+
+    return {
+        "standing_token_pass": lambda s: _standing_token_pass(s, _documents(s)),
+        "shingled_documents": lambda s: shingled_documents(s, SF_DIR),
+        "shingled_documents_docs": lambda s: shingled_documents(
+            s, SF_DIR, docs=_documents(s).filter(F.col("doc_id") % 7 == 0)
+        ),
+        # hashed_shingled_documents' plan before its eager checkpoint
+        "hashed_shingled_documents": lambda s: hash_shingles(shingled_documents(s, SF_DIR)),
+        "minhash_signatures": lambda s: minhash_signatures(s, SF_DIR),
+        "sw_shingled_eval": lambda s: sw_shingled_eval(s, SF_DIR, 3),
+    }
+
+
+@pytest.mark.parametrize("case", sorted(_shingle_passes()))
+def test_shingle_pass_shingles_above_the_spread(spark, case):
+    """Every shingle pass spreads the raw rows, then shingles: the
+    shingle projection (zip_with over token slices) runs above the one
+    round-robin exchange, in every task, and nothing below it shingles.
+    minhash_signatures' aggregation exchange is not a spread."""
+    plan = formatted_plan(_shingle_passes()[case](spark))
     tree = plan.split("\n\n")[0].splitlines()
     node = lambda line: re.search(r"(\w+) \((\d+)\)$", line)  # noqa: E731
     nodes = [(i, node(l).group(1), node(l).group(2)) for i, l in enumerate(tree) if node(l)]
@@ -629,10 +655,55 @@ def test_standing_token_pass_shingles_above_the_spread(spark):
         m.group(1): m.group(2)
         for m in re.finditer(r"^\((\d+)\) [^\n]*\n(.*?)(?=\n\n|\Z)", plan, re.M | re.S)
     }
-    exchange = [i for i, name, _ in nodes if name == "Exchange"]
-    assert len(exchange) == 1 and "RoundRobinPartitioning" in plan, plan
+    spreads = [
+        i for i, name, n in nodes
+        if name == "Exchange" and "RoundRobinPartitioning" in details[n]
+    ]
+    assert len(spreads) == 1, plan
     shingling = [i for i, _, n in nodes if "zip_with" in details.get(n, "")]
-    assert shingling and all(i < exchange[0] for i in shingling), plan
+    assert shingling and all(i < spreads[0] for i in shingling), plan
+
+
+def _construction_jobs(spark, group: str, build) -> int:
+    """The number of Spark jobs ``build()`` launches."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_spreading_exchange_free_rows_launches_no_job(spark):
+    """spread's partition-count probe plans its input: over the scan, a
+    filtered scan or a stream (the rows every caller passes) that plan
+    has no Exchange, so building the shingle pass over them runs no
+    job. The inputs are built first: reading a parquet schema is a job
+    of its own."""
+    from benchviz_spark.operators.dedup import shingled_documents
+    from benchviz_spark.sources.tables import spread
+    from benchviz_spark.streaming.windows import read_documents_stream
+
+    docs = _documents(spark)
+    stream = read_documents_stream(spark, SF_DIR)
+    builds = {
+        "scan": lambda: shingled_documents(spark, SF_DIR, docs=docs),
+        "docs": lambda: shingled_documents(
+            spark, SF_DIR, docs=docs.filter(F.col("doc_id") % 7 == 0)
+        ),
+        "stream": lambda: spread(spark, stream),
+    }
+    jobs = {
+        name: _construction_jobs(spark, f"test_spread_no_job_{name}", build)
+        for name, build in builds.items()
+    }
+    assert jobs == {"scan": 0, "docs": 0, "stream": 0}
+    # the probe does run an Exchange's shuffle stages, which is why
+    # callers pass exchange-free rows
+    grouped = docs.groupBy("lang").count()
+    assert _construction_jobs(spark, "test_spread_job_exchange", lambda: spread(spark, grouped)) > 0
 
 
 def test_point_lookup_over_clustered_cache_gathers_without_exchange(spark):

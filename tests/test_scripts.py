@@ -1,6 +1,7 @@
 """The scripts/ tooling: every script compiles and is documented,
 ``scale_tiers.build_tier``'s recipe holds on a small snapshot, and the
-A/B runner's statistics are right. Only the ``build_tier`` test uses
+A/B runner's statistics are right. One source check keeps the spread
+decision in ``tables.spread``. Only the ``build_tier`` test uses
 Spark (the session fixture, no new JVM)."""
 
 from __future__ import annotations
@@ -9,6 +10,7 @@ import glob
 import importlib.util
 import math
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -60,6 +62,23 @@ def test_every_script_compiles_and_is_named_by_a_test_or_doc():
         if os.path.basename(path) not in cited:
             unnamed.append(os.path.basename(path))
     assert not unnamed, f"scripts no test or top-level doc names: {unnamed}"
+
+
+def test_only_tables_spread_repartitions_to_default_parallelism():
+    """Whether and how to spread rows across cores is decided in one
+    place, ``sources/tables.spread`` (streams included): no other module
+    under benchviz_spark/ repartitions to defaultParallelism unkeyed. A
+    keyed repartition (``repartition(n, col)``) is a different operation."""
+    unkeyed = re.compile(r"repartition\(\s*\w+\.sparkContext\.defaultParallelism\s*\)")
+    package = os.path.join(REPO, "benchviz_spark")
+    offenders = []
+    for path in glob.glob(os.path.join(package, "**", "*.py"), recursive=True):
+        if os.path.relpath(path, package) == os.path.join("sources", "tables.py"):
+            continue
+        with open(path, encoding="utf-8") as fh:
+            if unkeyed.search(fh.read()):
+                offenders.append(os.path.relpath(path, REPO))
+    assert not offenders, f"call tables.spread instead: {offenders}"
 
 
 # --- ab.py statistics (no Spark) ------------------------------------------

@@ -7,6 +7,9 @@ from __future__ import annotations
 
 import json
 import os
+import re
+
+import pytest
 
 from benchviz_spark.operators.events import (
     events_session_stats,
@@ -266,3 +269,74 @@ def test_admission_stream_zero_state_matches_batch(spark, tmp_path):
     batch = {tuple(r) for r in admission_delta_indexed(spark, SF_DIR).collect()}
     assert streamed == batch
     assert len(batch) > 0
+
+
+# --- one spread per stream gate --------------------------------------------
+
+_SPREAD = re.compile(r"^~?Repartition \d+, true$")
+_HEAVY = ("MapInPandas", "zip_with(", "aggregate(")
+
+
+def _tree(df) -> list[tuple[int, str]]:
+    """(depth, node) per line of ``df``'s analyzed logical plan: a
+    stream cannot be planned further before it starts."""
+    out = []
+    for line in df._jdf.queryExecution().analyzed().toString().splitlines():
+        node = line.lstrip(" :+-")
+        out.append(((len(line) - len(node)) // 3, node))
+    return out
+
+
+def _below(tree, i: int) -> list[str]:
+    """The nodes in the subtree under line ``i``."""
+    depth, out = tree[i][0], []
+    for d, node in tree[i + 1:]:
+        if d <= depth:
+            break
+        out.append(node)
+    return out
+
+
+def test_spread_repartitions_a_stream_once(spark):
+    """spread over the document stream takes its stream branch: one
+    round-robin repartition to cluster parallelism, still a stream."""
+    from benchviz_spark.sources.tables import spread
+    from benchviz_spark.streaming.windows import read_documents_stream
+
+    out = spread(spark, read_documents_stream(spark, SF_DIR))
+    assert out.isStreaming
+    n = spark.sparkContext.defaultParallelism
+    spreads = [node for _, node in _tree(out) if _SPREAD.match(node)]
+    assert spreads == [f"~Repartition {n}, true"]
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "stream_image_dhash",
+        "stream_video_frame_dhash",
+        "stream_classifier_gate",
+        "stream_dsir_gate",
+        "stream_decontam_gate",
+        "stream_dedup_admission",
+    ],
+)
+def test_stream_gate_spreads_once_below_its_heavy_projection(spark, name):
+    """Each stream gate's heavy work (a mapInPandas stage, a shingle or
+    a token-fold projection) has exactly one round-robin repartition
+    under it — not none, and not a gate-side copy on top of the one its
+    operator makes — and nothing heavy runs under a repartition."""
+    from benchviz_spark.operators.curation import build_admission_index
+    from benchviz_spark.streaming import windows
+
+    if name == "stream_dedup_admission":
+        build_admission_index(spark, SF_DIR)
+    tree = _tree(getattr(windows, name)(spark, SF_DIR))
+    plan = "\n".join(node for _, node in tree)
+    heavy = [i for i, (_, node) in enumerate(tree) if any(h in node for h in _HEAVY)]
+    assert heavy, plan
+    for i in heavy:
+        assert sum(bool(_SPREAD.match(n)) for n in _below(tree, i)) == 1, plan
+    for i, (_, node) in enumerate(tree):
+        if _SPREAD.match(node):
+            assert not [n for n in _below(tree, i) if any(h in n for h in _HEAVY)], plan
